@@ -11,10 +11,10 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").trim.toInt
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
@@ -117,14 +117,18 @@ object Bench {
     val spreads = results.map { case (k, (_, s)) =>
       "\"" + k + "\":" + BigDecimal(s).setScale(3, BigDecimal.RoundingMode.HALF_UP) }
       .mkString("{", ",", "}")
+    // a failed query (-1) is left out of the total, so the artifact names
+    // every failure and counts them beside it
     val total = results.map(_._2._1).filter(_ >= 0).sum
+    val failed = results.collect { case (k, (m, _)) if m < 0 => "\"" + k + "\"" }
     // record what was NOT run (skip list or ONLY include-list), even when
     // empty, so a partial run's "total" is never mistaken for a full suite
     val notRun = SparkEntry.queries.keys.toSeq.sorted
       .filterNot(selected.toSet)
       .map("\"" + _ + "\"").mkString("[", ",", "]")
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
-      s""""spread":$spreads,"iters":$iters,"skipped":$notRun,"sf":"$sfDir"}"""
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","cpus":$cpus,"queries":$qs,""" +
+      s""""spread":$spreads,"iters":$iters,"n_failed":${failed.size},""" +
+      s""""failed":${failed.mkString("[", ",", "]")},"skipped":$notRun,"sf":"$sfDir"}"""
     println(json)
     // stdout goes through sbt's log decorator ("[info] " prefixes), so also
     // write the line to a file harnesses can parse without stripping

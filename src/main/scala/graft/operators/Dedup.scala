@@ -62,10 +62,13 @@ object Dedup {
     * 3.2 MiB**, and every probe re-opened all of them; the probe's scan
     * time was dominated by per-file open/footer overhead, §6's
     * small-files trap inside the index layout). One bounded exchange at
-    * BUILD time buys every probe a `buckets`-file scan; at production
-    * scale it also aggregates each bucket into few large files (the
-    * §6 128 MB–1 GB target) instead of sharding it across every write
-    * task.
+    * BUILD time buys every probe a `buckets`-file scan. The cost is the
+    * other side of the same choice: each write emits exactly one file per
+    * bucket, of unbounded size, and write parallelism is capped at
+    * `buckets` (a hot bucket key is one straggler task writing one large
+    * file). Nothing here targets a file size; at production scale the
+    * caller must size `buckets` to the corpus to keep files near the §6
+    * 128 MB–1 GB range.
     */
   private[graft] def bucketAligned(df: DataFrame, buckets: Int,
                                    cols: String*): DataFrame =

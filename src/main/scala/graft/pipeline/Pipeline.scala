@@ -1,6 +1,12 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.LogicalTypeAnnotation.IntLogicalTypeAnnotation
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -24,6 +30,7 @@ import org.apache.spark.sql.types._
   * defined but left out of its DAG (T3 ⚠).
   */
 object Pipeline {
+  import scala.jdk.CollectionConverters._
 
   /** Pinned landing schemas for the reference's three staging tables.
     * `orders.csv` headers call the last column `total_price` while the DDL
@@ -136,32 +143,96 @@ object Pipeline {
     df.withColumn("shipment_date", to_date(col("shipment_date"), "yyyy-MM-dd"))
       .withColumn("delivery_date", to_date(col("delivery_date"), "yyyy-MM-dd"))
 
-  /** S3/A7: the incremental watermark append. Reads the staged table's
-    * current MAX(pk) (COALESCE 0), filters the incoming batch to pk > max,
-    * appends. Exactly-once for monotonic keys, idempotent on re-run —
-    * the reference's semantics (`:95-107`) without the client-side loop.
+  /** S3/A7: the incremental watermark append. Takes the staged table's
+    * current MAX(pk) (COALESCE 0) from the parquet footers
+    * ([[stagedWatermark]], no Spark job), filters the incoming batch to
+    * pk > max and appends it. Exactly-once for monotonic keys, idempotent on
+    * re-run: the reference's semantics (`:95-107`) without the client-side
+    * loop. One Spark job, the write; the returned row count is observed on
+    * it. A batch with nothing new still commits, as one zero-row file.
     */
   def watermarkAppend(spark: SparkSession, incoming: DataFrame, pk: String,
                       stagingPath: String): Long = {
-    val existing = readStagingOrEmpty(spark, stagingPath, incoming.schema)
-    val max = existing
-      .agg(coalesce(org.apache.spark.sql.functions.max(col(pk).cast("long")), lit(0L)))
-      .collect()(0).getLong(0)
-    val fresh = incoming.filter(col(pk).cast("long") > max)
-    val n = fresh.count()
-    if (n > 0) fresh.write.mode(SaveMode.Append).parquet(stagingPath)
-    n
+    val max = stagedWatermark(spark, stagingPath, pk)
+    writeCounted(incoming.filter(col(pk).cast("long") > max))(
+      _.write.mode(SaveMode.Append).parquet(stagingPath))
   }
 
   /** S4: full append, no dedup — reference-faithful for reviews (T5 ⚠:
     * at-least-once, duplicating on re-run; `dedup = true` opts into the fix).
+    * One Spark job, the write (plus the dedup shuffle when opted in); the
+    * returned row count is observed on it.
     */
   def fullAppend(spark: SparkSession, incoming: DataFrame, stagingPath: String,
-                 dedup: Boolean = false): Long = {
-    val batch = if (dedup) incoming.dropDuplicates() else incoming
-    val n = batch.count()
-    batch.write.mode(SaveMode.Append).parquet(stagingPath)
-    n
+                 dedup: Boolean = false): Long =
+    writeCounted(if (dedup) incoming.dropDuplicates() else incoming)(
+      _.write.mode(SaveMode.Append).parquet(stagingPath))
+
+  /** Runs `write` over `df` and returns the rows it wrote, observed on the
+    * write's own job (`Dataset.observe`) instead of a separate `count()`.
+    */
+  private def writeCounted(df: DataFrame)(write: DataFrame => Unit): Long = {
+    val rows = Observation()
+    write(df.observe(rows, count(lit(1)).as("rows")))
+    rows.get("rows").asInstanceOf[Long]
+  }
+
+  /** COALESCE(MAX(pk), 0) over a staged parquet table, on the driver: the
+    * largest `pk` row-group statistic in the footers of the table's files,
+    * listed through the Hadoop FileSystem (so `s3a:` staging works). A
+    * missing or empty table reads 0. Only when a footer carries no signed
+    * INT32/INT64 statistics for a top-level column named exactly `pk`
+    * (another type or name case, a nested or partitioned layout, a writer
+    * that left statistics out) does it fall back to scanning the table. A
+    * data file that is not parquet throws, as the scan would.
+    */
+  private[graft] def stagedWatermark(spark: SparkSession, stagingPath: String,
+                                     pk: String): Long = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val dir = new Path(stagingPath)
+    val fs = dir.getFileSystem(conf)
+    if (!fs.exists(dir)) return 0L
+    // the files Spark's own listing would read
+    val files = fs.listStatus(dir).filterNot { st =>
+      val n = st.getPath.getName
+      n.startsWith("_") || n.startsWith(".") || n.endsWith("._COPYING_")
+    }
+    val maxes = files.map(st => if (st.isFile) footerMax(st, conf, pk) else None)
+    if (maxes.forall(_.isDefined)) maxes.flatMap(_.get).maxOption.getOrElse(0L)
+    else spark.read.parquet(stagingPath)
+      .agg(coalesce(max(col(pk).cast("long")), lit(0L)))
+      .collect()(0).getLong(0)
+  }
+
+  /** The largest `pk` value in one parquet file by its row-group statistics:
+    * Some(None) when the file holds no non-null `pk`, None when the footer
+    * cannot tell.
+    */
+  private def footerMax(file: FileStatus, conf: Configuration,
+                        pk: String): Option[Option[Long]] = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf))
+    val footer = try reader.getFooter finally reader.close()
+    val field = footer.getFileMetaData.getSchema.getFields.asScala
+      .find(f => f.getName == pk && f.isPrimitive).map(_.asPrimitiveType)
+    val integral = field.exists { f =>
+      val signed = f.getLogicalTypeAnnotation match {
+        case null => true
+        case i: IntLogicalTypeAnnotation => i.isSigned
+        case _ => false
+      }
+      signed && (f.getPrimitiveTypeName == PrimitiveTypeName.INT32 ||
+        f.getPrimitiveTypeName == PrimitiveTypeName.INT64)
+    }
+    if (!integral) return None
+    val perGroup = footer.getBlocks.asScala.filter(_.getRowCount > 0).map { block =>
+      block.getColumns.asScala.find(_.getPath.toArray.sameElements(Array(pk)))
+        .map(_.getStatistics).filter(s => s != null && !s.isEmpty)
+        .map(s => if (!s.hasNonNullValue) None else s.genericGetMax match {
+          case i: java.lang.Integer => Some(i.longValue)
+          case l: java.lang.Long => Some(l.longValue)
+        })
+    }
+    if (perGroup.forall(_.isDefined)) Some(perGroup.flatMap(_.get).maxOption) else None
   }
 
   private def readStagingOrEmpty(spark: SparkSession, path: String,
@@ -182,9 +253,11 @@ object Pipeline {
     out.write.mode(SaveMode.Overwrite).option("header", "true").csv(path)
   }
 
-  /** S10: idempotent overwrite of an analytics table (TRUNCATE+INSERT). */
-  def overwriteParquet(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).parquet(path)
+  /** S10: idempotent overwrite of an analytics table (TRUNCATE+INSERT).
+    * Returns the rows written, observed on the write's own job.
+    */
+  def overwriteParquet(df: DataFrame, path: String): Long =
+    writeCounted(df)(_.write.mode(SaveMode.Overwrite).parquet(path))
 
   /** Upsert (merge-by-key): incoming rows replace same-key staged rows,
     * new keys append — the natural extension of the reference's

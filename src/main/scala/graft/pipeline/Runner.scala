@@ -76,6 +76,25 @@ object Runner {
     attempt(1)
   }
 
+  /** Jobs per stage, so a run does only the work it needs:
+    *
+    *  - landing: none. The CSVs are read with pinned schemas, and the
+    *    normalized orders batch is persisted, so it is parsed once;
+    *  - validate: one aggregate over the orders batch (AQE splits it into a
+    *    few jobs). It fills the persisted copy and still gates the batch
+    *    before anything is staged;
+    *  - staging: one write per table. Orders are written from the persisted
+    *    copy. The watermarks come from the staged parquet footers, without
+    *    a job;
+    *  - transform: the three analytics queries and their writes, over
+    *    staging read with the batch's known schemas (no inference job);
+    *  - export: one CSV write per analytics table, from the parquet just
+    *    published, read with its known schema.
+    *
+    * Every row count in the [[RunReport]] is observed on the write that
+    * produced the rows, not taken by a separate `count()`. The persisted
+    * batch is released when the run ends, whether it succeeds or fails.
+    */
   def run(spark: SparkSession, work: String, runDate: String,
           retries: Int = DefaultRetries,
           retryDelayMs: Long = DefaultRetryDelayMs,
@@ -92,61 +111,63 @@ object Runner {
        Pipeline.normalizeShipments(
          Pipeline.readCsv(spark, s"$landing/shipment_deliveries.csv", Pipeline.shipmentsSchema)))
     }
-
-    // 2.5 validate: expectations gate on the INCOMING batch, before any
-    // append — a batch that breaks key uniqueness or value rules must
-    // fail HERE, loudly, not silently corrupt the staging store. Order
-    // matters: validating after the append would advance the watermark
-    // past the bad keys, so a corrected re-delivery of the same batch
-    // would be filtered out forever — the pipeline would be wedged with
-    // no in-band recovery. (Stage logged + rethrown like any other, T6.)
-    logged(work, "validate") {
-      import org.apache.spark.sql.functions._
-      val checks = orders.agg(
-          count(lit(1)).as("n"),
-          countDistinct(col("order_id")).as("n_keys"),
-          coalesce(sum(when(col("amount") < 0, 1).otherwise(0)), lit(0L)).as("neg"))
-        .collect()(0)
-      if (checks.getLong(0) != checks.getLong(1))
-        throw new IllegalStateException(
-          s"validate: incoming orders key not unique (${checks.getLong(0)} rows, ${checks.getLong(1)} keys)")
-      if (checks.getLong(2) != 0L)
-        throw new IllegalStateException(
-          s"validate: ${checks.getLong(2)} incoming orders with negative amount")
-    }
-
-    // 3. staging loads: watermark-incremental for keyed tables, full append
-    //    for reviews (reference-faithful at-least-once)
-    val staged = logged(work, "staging") {
-      Map(
-        "orders" -> Pipeline.watermarkAppend(spark, orders, "order_id", s"$work/staging/orders"),
-        "shipment_deliveries" -> Pipeline.watermarkAppend(
-          spark, shipments, "shipment_id", s"$work/staging/shipment_deliveries"),
-        "reviews" -> Pipeline.fullAppend(spark, reviews, s"$work/staging/reviews"))
-    }
-
-    // 4. transform: run the analytics queries against the staged views
-    val analytics = logged(work, "transform") {
-      spark.read.parquet(s"$work/staging/orders").createOrReplaceTempView("staging_orders")
-      spark.read.parquet(s"$work/staging/reviews").createOrReplaceTempView("staging_reviews")
-      spark.read.parquet(s"$work/staging/shipment_deliveries")
-        .createOrReplaceTempView("staging_shipment_deliveries")
-      val a = transformStaged(spark)
-      a.foreach { case (name, df) =>
-        Pipeline.overwriteParquet(df, s"$work/analytics/$name")
+    orders.persist()
+    try {
+      // 2.5 validate: expectations gate on the INCOMING batch, before any
+      // append — a batch that breaks key uniqueness or value rules must
+      // fail HERE, loudly, not silently corrupt the staging store. Order
+      // matters: validating after the append would advance the watermark
+      // past the bad keys, so a corrected re-delivery of the same batch
+      // would be filtered out forever — the pipeline would be wedged with
+      // no in-band recovery. (Stage logged + rethrown like any other, T6.)
+      logged(work, "validate") {
+        import org.apache.spark.sql.functions._
+        val checks = orders.agg(
+            count(lit(1)).as("n"),
+            countDistinct(col("order_id")).as("n_keys"),
+            coalesce(sum(when(col("amount") < 0, 1).otherwise(0)), lit(0L)).as("neg"))
+          .collect()(0)
+        if (checks.getLong(0) != checks.getLong(1))
+          throw new IllegalStateException(
+            s"validate: incoming orders key not unique (${checks.getLong(0)} rows, ${checks.getLong(1)} keys)")
+        if (checks.getLong(2) != 0L)
+          throw new IllegalStateException(
+            s"validate: ${checks.getLong(2)} incoming orders with negative amount")
       }
-      a
-    }
 
-    // 5. export: analytics tables back out as header'd CSV
-    val counts = logged(work, "export") {
-      analytics.map { case (name, _) =>
-        val persisted = spark.read.parquet(s"$work/analytics/$name")
-        Pipeline.exportCsv(persisted, s"$work/export/$name")
-        name -> persisted.count()
+      // 3. staging loads: watermark-incremental for keyed tables, full append
+      //    for reviews (reference-faithful at-least-once)
+      val staged = logged(work, "staging") {
+        Map(
+          "orders" -> Pipeline.watermarkAppend(spark, orders, "order_id", s"$work/staging/orders"),
+          "shipment_deliveries" -> Pipeline.watermarkAppend(
+            spark, shipments, "shipment_id", s"$work/staging/shipment_deliveries"),
+          "reviews" -> Pipeline.fullAppend(spark, reviews, s"$work/staging/reviews"))
       }
-    }
-    RunReport(runDate, staged, counts)
+
+      // 4. transform: run the analytics queries against the staged views;
+      //    keep each table's schema and written row count for the export
+      val analytics = logged(work, "transform") {
+        Seq("orders" -> orders, "reviews" -> reviews, "shipment_deliveries" -> shipments)
+          .foreach { case (t, batch) =>
+            spark.read.schema(batch.schema).parquet(s"$work/staging/$t")
+              .createOrReplaceTempView(s"staging_$t")
+          }
+        transformStaged(spark).map { case (name, df) =>
+          name -> (df.schema, Pipeline.overwriteParquet(df, s"$work/analytics/$name"))
+        }
+      }
+
+      // 5. export: the published analytics tables out as header'd CSV
+      val counts = logged(work, "export") {
+        analytics.map { case (name, (schema, rows)) =>
+          Pipeline.exportCsv(spark.read.schema(schema).parquet(s"$work/analytics/$name"),
+            s"$work/export/$name")
+          name -> rows
+        }
+      }
+      RunReport(runDate, staged, counts)
+    } finally orders.unpersist()
   }
 
   /** The reference's three analytics outputs (`sql/transformation.sql`)

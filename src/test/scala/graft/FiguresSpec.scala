@@ -32,10 +32,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * both, and the r12 README/overwritten-artifact pair that produced the
   * flap is pinned as a must-pass regression fixture.
   *
-  * The `sbt test` count is the one figure a test cannot observe from
-  * inside the run (a suite cannot see its siblings' totals), so it stays
-  * an explicit `gen_figures.py --tests` argument; everything else in the
-  * block is a pure function of artifacts that this suite re-derives —
+  * The `sbt test` counts are the one figure a test cannot observe from
+  * inside the run (a suite cannot see its siblings' totals), so they stay
+  * explicit `gen_figures.py --passed/--failed/--cancelled` arguments;
+  * everything else in the block is a pure function of artifacts that this
+  * suite re-derives —
   * and each check is a named function so the negative cases below can
   * prove the failure modes still fire.
   */

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -434,6 +436,132 @@ class PipelineSpec extends AnyFunSuite {
     val byK = merged.collect().map(r => r.getInt(0) -> r).toMap
     assert(byK(1).isNullAt(byK(1).fieldIndex("score")), "old file reads null for the new column")
     assert(byK(2).getDouble(byK(2).fieldIndex("score")) == 9.5)
+  }
+
+  /** Lands the small three-table fixture the runner tests use. */
+  private def landFixture(work: String): Unit = {
+    val landing = s"$work/landing/dt=2026-01-01"
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(landing))
+    writeCsv(landing, "orders.csv", ordersCsv)
+    writeCsv(landing, "reviews.csv", "review,product_id\n5,5\n4,5\n5,6\n")
+    writeCsv(landing, "shipment_deliveries.csv",
+      """shipment_id,order_id,shipment_date,delivery_date
+        |1,1,2022-01-10,
+        |2,2,,
+        |""".stripMargin)
+  }
+
+  /** The Spark jobs `f` submits, counted by a listener. Two marker jobs
+    * fence the count: job ids are assigned in submission order and listener
+    * events arrive in order, so once the closing marker has been seen, every
+    * job with an id between the two markers was one of `f`'s.
+    */
+  private def jobsOf(f: => Any): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val marker = s"graft-job-fence-${java.util.UUID.randomUUID}"
+    val ids = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val fences = new java.util.concurrent.LinkedBlockingQueue[Integer]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == marker))
+          fences.put(e.jobId)
+        else ids.add(e.jobId)
+    }
+    def fence(): Int = {
+      sc.setJobGroup(marker, "job-count fence")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val id = fences.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+      assert(id != null, "fence job never reached the listener")
+      id.intValue
+    }
+    sc.addSparkListener(listener)
+    try {
+      val from = fence()
+      f
+      val to = fence()
+      ids.asScala.count(id => id > from && id < to)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("runner job budget: one run starts at most 24 Spark jobs on the fixture") {
+    import graft.pipeline.Runner
+    val work = tmpDir()
+    landFixture(work)
+    // first run on an empty work dir, then a steady-state re-run. Counts
+    // from the writes, footer watermarks and known schemas keep both far
+    // below the 39/41 jobs that separate count()s, MAX(pk) scans, schema
+    // inference and read-back counts cost on this fixture
+    val cold = jobsOf(Runner.run(spark, work, "2026-01-01"))
+    val steady = jobsOf(Runner.run(spark, work, "2026-01-01"))
+    assert(cold <= 24 && steady <= 24, s"jobs per run: cold $cold, steady $steady")
+  }
+
+  test("footer watermark equals the scanned MAX(pk), fallback included") {
+    import spark.implicits._
+    val dir = tmpDir()
+    def scanned(path: String, pk: String): Long =
+      if (!Files.exists(java.nio.file.Paths.get(path))) 0L
+      else spark.read.parquet(path)
+        .agg(coalesce(max(col(pk).cast("long")), lit(0L))).collect()(0).getLong(0)
+    def same(path: String, pk: String, expected: Long): Unit = {
+      assert(scanned(path, pk) == expected)
+      assert(Pipeline.stagedWatermark(spark, path, pk) == expected, s"$path $pk")
+    }
+    val staging = s"$dir/staging_orders"
+    same(staging, "order_id", 0L) // nothing staged yet
+    val b1 = Pipeline.normalizeOrders(Pipeline.readCsv(
+      spark, writeCsv(dir, "b1.csv", ordersCsv), Pipeline.ordersSchema))
+    val b2 = Pipeline.normalizeOrders(Pipeline.readCsv(
+      spark, writeCsv(dir, "b2.csv", ordersCsvBatch2), Pipeline.ordersSchema))
+    Pipeline.watermarkAppend(spark, b1, "order_id", staging)
+    Pipeline.watermarkAppend(spark, b2, "order_id", staging)
+    same(staging, "order_id", 4L)
+    // a no-op re-run still commits its (zero-row) file; the footers agree
+    val filesBefore = new java.io.File(staging).list().count(_.endsWith(".parquet"))
+    assert(Pipeline.watermarkAppend(spark, b2, "order_id", staging) == 0L)
+    assert(new java.io.File(staging).list().count(_.endsWith(".parquet")) >= filesBefore)
+    same(staging, "order_id", 4L)
+    // BIGINT keys, negative keys (COALESCE keeps the negative max) and an
+    // all-null key column read from footers too
+    Seq(7L, 3000000000L).toDF("k").write.parquet(s"$dir/longs")
+    same(s"$dir/longs", "k", 3000000000L)
+    Seq(-5, -9).toDF("k").write.parquet(s"$dir/negative")
+    same(s"$dir/negative", "k", -5L)
+    Seq(Option.empty[Int], None).toDF("k").write.parquet(s"$dir/nulls")
+    same(s"$dir/nulls", "k", 0L)
+    // non-integral keys carry no integral statistics: the scan fallback
+    Seq("7", "12", "9").toDF("k").write.parquet(s"$dir/strings")
+    same(s"$dir/strings", "k", 12L)
+    Seq(2.0, 40.0).toDF("k").write.parquet(s"$dir/doubles")
+    same(s"$dir/doubles", "k", 40L)
+  }
+
+  test("run report counts equal the rows in staging, analytics and the exports") {
+    import graft.pipeline.Runner
+    val work = tmpDir()
+    landFixture(work)
+    def stagedNow(t: String): Long = {
+      val p = s"$work/staging/$t"
+      if (Files.exists(java.nio.file.Paths.get(p))) spark.read.parquet(p).count() else 0L
+    }
+    val tables = Seq("orders", "shipment_deliveries", "reviews")
+    (1 to 2).foreach { _ =>
+      val before = tables.map(t => t -> stagedNow(t)).toMap
+      val r = Runner.run(spark, work, "2026-01-01")
+      assert(r.stagedRows == tables.map(t => t -> (stagedNow(t) - before(t))).toMap)
+      r.analyticsRows.foreach { case (name, n) =>
+        assert(spark.read.parquet(s"$work/analytics/$name").count() == n, name)
+        assert(spark.read.option("header", "true").csv(s"$work/export/$name").count() == n, name)
+      }
+    }
+    // dedup = true reports the rows it wrote, not the rows it was handed
+    val reviews = Pipeline.readCsv(spark,
+      writeCsv(work, "r.csv", "review,product_id\n5,1\n5,1\n4,2\n"), Pipeline.reviewsSchema)
+    val s = s"$work/staging_dedup"
+    assert(Pipeline.fullAppend(spark, reviews, s, dedup = true) == 2L)
+    assert(Pipeline.fullAppend(spark, reviews, s) == 3L)
+    assert(spark.read.parquet(s).count() == 5L)
   }
 
   test("csv export round-trips with header") {

@@ -7,15 +7,17 @@ Numbers drift when they are typed; this script makes the README block a
 pure function of the artifacts:
 
   bench_out.json   — written by `runMain graft.Bench` (per-query medians,
-                     spreads, iters, skip list)
-  --tests N        — the "Tests: succeeded N" figure from the latest
-                     `sbt test` run (pass it explicitly so a stale log
-                     can't be mistaken for HEAD)
+                     spreads, iters, skip list, cores, failed queries)
+  --passed/--failed/--cancelled
+                   — the "Tests: succeeded N, failed F, canceled C" figures
+                     from the latest `sbt test` run (pass them explicitly so
+                     a stale log can't be mistaken for HEAD); "all green" is
+                     printed only when F is 0
   --correct "M/M"  — the check_oracle.py verdict line, e.g. "91/91"
 
 Usage:
-  python3 tools/gen_figures.py --tests 127 --correct 91/91          # print
-  python3 tools/gen_figures.py --tests 127 --correct 91/91 --apply  # rewrite README
+  python3 tools/gen_figures.py --passed 127 --failed 0 --cancelled 5 --correct 91/91
+  python3 tools/gen_figures.py --passed 127 --failed 0 --cancelled 5 --correct 91/91 --apply
 
 With --apply the text between the FIGURES:BEGIN/END markers in README.md
 is replaced; everything outside the markers is untouched.
@@ -29,15 +31,16 @@ BEGIN = "<!-- FIGURES:BEGIN (generated by tools/gen_figures.py; do not edit) -->
 END = "<!-- FIGURES:END -->"
 
 
-def block(bench: dict, tests: int | None, correct: str | None) -> str:
+def block(bench: dict, tests: tuple[int, int, int] | None, correct: str | None) -> str:
     queries = {k: v for k, v in bench["queries"].items() if v >= 0}
     failed = sorted(k for k, v in bench["queries"].items() if v < 0)
     skipped = bench.get("skipped", [])
     spreads = bench.get("spread", {})
     total = sum(queries.values())
+    cores = f", {bench['cpus']} cores" if "cpus" in bench else ""
     lines = [BEGIN]
     lines.append(
-        f"- sf0.1 bench (`{bench['sf']}`): **{len(queries)} queries, "
+        f"- sf0.1 bench (`{bench['sf']}`{cores}): **{len(queries)} queries, "
         f"{total:.1f} s total** (avg {total / len(queries):.3f} s/query), "
         f"per-query warmup + median-of-{bench['iters']}."
     )
@@ -71,7 +74,12 @@ def block(bench: dict, tests: int | None, correct: str | None) -> str:
             "(rows + schema + value hash) at sf0.01 via `tools/check_oracle.py`."
         )
     if tests:
-        lines.append(f"- `sbt test`: **{tests} tests**, all green.")
+        passed, failed_tests, cancelled = tests
+        verdict = "all green" if failed_tests == 0 else "**NOT green**"
+        lines.append(
+            f"- `sbt test`: **{passed} passed**, {failed_tests} failed, "
+            f"{cancelled} cancelled; {verdict}."
+        )
     lines.append(END)
     return "\n".join(lines)
 
@@ -80,14 +88,19 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--bench", default="bench_out.json")
     ap.add_argument("--readme", default="README.md")
-    ap.add_argument("--tests", type=int, default=None)
+    ap.add_argument("--passed", type=int, default=None)
+    ap.add_argument("--failed", type=int, default=None)
+    ap.add_argument("--cancelled", type=int, default=None)
     ap.add_argument("--correct", default=None, help='e.g. "91/91"')
     ap.add_argument("--apply", action="store_true")
     args = ap.parse_args()
 
     with open(args.bench) as f:
         bench = json.load(f)
-    text = block(bench, args.tests, args.correct)
+    counts = (args.passed, args.failed, args.cancelled)
+    if any(c is None for c in counts) and any(c is not None for c in counts):
+        ap.error("--passed, --failed and --cancelled go together")
+    text = block(bench, None if counts[0] is None else counts, args.correct)
     if not args.apply:
         print(text)
         return 0
