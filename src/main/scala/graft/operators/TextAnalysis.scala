@@ -236,24 +236,29 @@ object TextAnalysis {
     * SORTED list, computed by a per-row fold — the r15 rewrite of the r14
     * explode + two hash aggregations (guide §2.4: three corpus Exchanges
     * removed for a quantity that is a pure function of one row). 0.0 for
-    * an empty list (the r14 left-join + coalesce contract); `sequence(2,
-    * 1)` would generate DESCENDING, so tot < 2 is guarded.
+    * an empty list (the r14 left-join + coalesce contract).
+    *
+    * The fold walks `sg`'s own elements, carrying the previous gram in the
+    * accumulator, so `sg` appears once, as the fold's argument, and is
+    * evaluated once per row. Indexing it from inside the lambda would let
+    * Catalyst inline `array_sort(grams)` there and rebuild the sort for
+    * every element: quadratic per document.
     */
   private[graft] def topShareOverSorted(sg: org.apache.spark.sql.Column,
                                             tot: org.apache.spark.sql.Column)
       : org.apache.spark.sql.Column =
     when(tot === 0, lit(0.0)).otherwise(
       round(
-        when(tot === 1, lit(1L)).otherwise(
-          aggregate(sequence(lit(2), tot),
-            struct(lit(1L).as("run"), lit(1L).as("best")),
-            (acc, i) => {
-              val run = when(element_at(sg, i) === element_at(sg, i - 1),
-                acc.getField("run") + 1L).otherwise(lit(1L))
-              struct(run.as("run"),
-                greatest(acc.getField("best"), run).as("best"))
-            },
-            acc => acc.getField("best"))).cast("double")
+        aggregate(sg,
+          struct(lit(null).cast("string").as("prev"), lit(0L).as("run"),
+            lit(0L).as("best")),
+          (acc, g) => {
+            val run = when(acc.getField("prev") === g,
+              acc.getField("run") + 1L).otherwise(lit(1L))
+            struct(g.as("prev"), run.as("run"),
+              greatest(acc.getField("best"), run).as("best"))
+          },
+          acc => acc.getField("best")).cast("double")
           / tot + 1e-9, 4))
 
   /** t9: repetition metrics per document — the Gopher-style quality rules

@@ -189,19 +189,27 @@ object Pipeline {
   private[graft] def stagedWatermark(spark: SparkSession, stagingPath: String,
                                      pk: String): Long = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val dir = new Path(stagingPath)
-    val fs = dir.getFileSystem(conf)
-    if (!fs.exists(dir)) return 0L
-    // the files Spark's own listing would read
-    val files = fs.listStatus(dir).filterNot { st =>
-      val n = st.getPath.getName
-      n.startsWith("_") || n.startsWith(".") || n.endsWith("._COPYING_")
-    }
-    val maxes = files.map(st => if (st.isFile) footerMax(st, conf, pk) else None)
+    val maxes = stagedFiles(spark, stagingPath)
+      .map(st => if (st.isFile) footerMax(st, conf, pk) else None)
     if (maxes.forall(_.isDefined)) maxes.flatMap(_.get).maxOption.getOrElse(0L)
     else spark.read.parquet(stagingPath)
       .agg(coalesce(max(col(pk).cast("long")), lit(0L)))
       .collect()(0).getLong(0)
+  }
+
+  /** The entries of a staged table's directory that Spark's own listing
+    * would read (none when the directory is missing), listed through the
+    * Hadoop FileSystem, so `file:`, `s3a:` and `hdfs:` URIs work as plain
+    * paths do.
+    */
+  private def stagedFiles(spark: SparkSession, stagingPath: String): Array[FileStatus] = {
+    val dir = new Path(stagingPath)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(dir)) Array.empty
+    else fs.listStatus(dir).filterNot { st =>
+      val n = st.getPath.getName
+      n.startsWith("_") || n.startsWith(".") || n.endsWith("._COPYING_")
+    }
   }
 
   /** The largest `pk` value in one parquet file by its row-group statistics:
@@ -235,13 +243,13 @@ object Pipeline {
     if (perGroup.forall(_.isDefined)) Some(perGroup.flatMap(_.get).maxOption) else None
   }
 
+  /** A staged table read with `schema`, or an empty frame of `schema` when
+    * nothing is staged at `path` yet.
+    */
   private def readStagingOrEmpty(spark: SparkSession, path: String,
-                                 schema: StructType): DataFrame = {
-    val dir = new java.io.File(path)
-    if (dir.exists() && dir.listFiles() != null && dir.listFiles().nonEmpty)
-      spark.read.parquet(path)
+                                 schema: StructType): DataFrame =
+    if (stagedFiles(spark, path).nonEmpty) spark.read.schema(schema).parquet(path)
     else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-  }
 
   /** S6: analytics export — header'd CSV. Small aggregate outputs use a
     * single writer (`coalesce(1)`, matching the reference's one-file-per-

@@ -1,5 +1,7 @@
 package graft.pipeline
 
+import java.util.concurrent.{Callable, ExecutionException, Executors}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.operators.{Extended, Relational}
@@ -51,7 +53,14 @@ object Runner {
     * stages keep the pipeline's declared at-least-once semantics: Spark's
     * file/JDBC committers publish output only on task-set success, so a
     * failed attempt leaves nothing a re-run would double-count that the
-    * dup-faithful append contract (T5) doesn't already own.
+    * dup-faithful append contract (T5) doesn't already own. A stage whose
+    * writes run together fails only once all of them have finished, so the
+    * retry never overlaps a write of the failed attempt. In staging the
+    * keyed appends are the ones that run together: a retry re-filters them
+    * by the watermark their own committed output moved. The unkeyed
+    * reviews append goes last, after both have committed, so a failed
+    * keyed append never leaves a reviews append behind for the retry to
+    * duplicate.
     */
   private def logged[A](work: String, stage: String, retries: Int = 0,
                         delayMs: Long = 0L,
@@ -76,20 +85,26 @@ object Runner {
     attempt(1)
   }
 
-  /** Jobs per stage, so a run does only the work it needs:
+  /** Jobs per stage, so a run does only the work it needs. The stages run
+    * in order; inside a stage, the writes that do not depend on each other
+    * run at the same time (each job is small, so one at a time leaves most
+    * cores idle):
     *
     *  - landing: none. The CSVs are read with pinned schemas, and the
     *    normalized orders batch is persisted, so it is parsed once;
     *  - validate: one aggregate over the orders batch (AQE splits it into a
     *    few jobs). It fills the persisted copy and still gates the batch
     *    before anything is staged;
-    *  - staging: one write per table. Orders are written from the persisted
-    *    copy. The watermarks come from the staged parquet footers, without
+    *  - staging: one write per table. The orders and shipments watermark
+    *    appends run together, orders from the persisted copy; the reviews
+    *    full append runs after both have committed (see [[logged]] for
+    *    why). The watermarks come from the staged parquet footers, without
     *    a job;
-    *  - transform: the three analytics queries and their writes, over
-    *    staging read with the batch's known schemas (no inference job);
-    *  - export: one CSV write per analytics table, from the parquet just
-    *    published, read with its known schema.
+    *  - transform: the three analytics queries and their writes, all three
+    *    at once, over staging read with the batch's known schemas (no
+    *    inference job);
+    *  - export: one CSV write per analytics table, all three at once, from
+    *    the parquet just published, read with its known schema.
     *
     * Every row count in the [[RunReport]] is observed on the write that
     * produced the rows, not taken by a separate `count()`. The persisted
@@ -135,39 +150,67 @@ object Runner {
             s"validate: ${checks.getLong(2)} incoming orders with negative amount")
       }
 
-      // 3. staging loads: watermark-incremental for keyed tables, full append
-      //    for reviews (reference-faithful at-least-once)
+      // 3. staging loads: watermark-incremental for the keyed tables, side
+      //    by side; then the full append of reviews (reference-faithful
+      //    at-least-once), only once both keyed appends have committed
       val staged = logged(work, "staging") {
-        Map(
-          "orders" -> Pipeline.watermarkAppend(spark, orders, "order_id", s"$work/staging/orders"),
-          "shipment_deliveries" -> Pipeline.watermarkAppend(
-            spark, shipments, "shipment_id", s"$work/staging/shipment_deliveries"),
-          "reviews" -> Pipeline.fullAppend(spark, reviews, s"$work/staging/reviews"))
+        together(
+          "orders" -> (() =>
+            Pipeline.watermarkAppend(spark, orders, "order_id", s"$work/staging/orders")),
+          "shipment_deliveries" -> (() => Pipeline.watermarkAppend(
+            spark, shipments, "shipment_id", s"$work/staging/shipment_deliveries"))) +
+          ("reviews" -> Pipeline.fullAppend(spark, reviews, s"$work/staging/reviews"))
       }
 
-      // 4. transform: run the analytics queries against the staged views;
-      //    keep each table's schema and written row count for the export
+      // 4. transform: run the analytics queries against the staged views,
+      //    all three writes at once; keep each table's schema and written
+      //    row count for the export
       val analytics = logged(work, "transform") {
         Seq("orders" -> orders, "reviews" -> reviews, "shipment_deliveries" -> shipments)
           .foreach { case (t, batch) =>
             spark.read.schema(batch.schema).parquet(s"$work/staging/$t")
               .createOrReplaceTempView(s"staging_$t")
           }
-        transformStaged(spark).map { case (name, df) =>
-          name -> (df.schema, Pipeline.overwriteParquet(df, s"$work/analytics/$name"))
-        }
+        together(transformStaged(spark).toSeq.map { case (name, df) =>
+          name -> (() => (df.schema, Pipeline.overwriteParquet(df, s"$work/analytics/$name")))
+        }: _*)
       }
 
-      // 5. export: the published analytics tables out as header'd CSV
+      // 5. export: the published analytics tables out as header'd CSV, all
+      //    three writes at once
       val counts = logged(work, "export") {
-        analytics.map { case (name, (schema, rows)) =>
-          Pipeline.exportCsv(spark.read.schema(schema).parquet(s"$work/analytics/$name"),
-            s"$work/export/$name")
-          name -> rows
-        }
+        together(analytics.toSeq.map { case (name, (schema, rows)) =>
+          name -> { () =>
+            Pipeline.exportCsv(spark.read.schema(schema).parquet(s"$work/analytics/$name"),
+              s"$work/export/$name")
+            rows
+          }
+        }: _*)
       }
       RunReport(runDate, staged, counts)
     } finally orders.unpersist()
+  }
+
+  /** Runs one stage's independent writes at the same time and returns their
+    * results by name. The pool belongs to this call: it is created by the
+    * calling thread, so its threads inherit the caller's Spark local
+    * properties (job group, scheduler pool, any key a listener attributes
+    * jobs by), and it is shut down when the call returns. Every unit is
+    * waited for before the first failure (in argument order) is rethrown,
+    * so a failed stage never retries while a sibling write still runs.
+    */
+  private def together[A](units: (String, () => A)*): Map[String, A] = {
+    val pool = Executors.newFixedThreadPool(units.size)
+    try {
+      val running = units.map { case (name, unit) =>
+        name -> pool.submit(new Callable[A] { def call(): A = unit() })
+      }
+      val done = running.map { case (name, f) =>
+        name -> (try Right(f.get()) catch { case e: ExecutionException => Left(e.getCause) })
+      }
+      done.collectFirst { case (_, Left(e)) => throw e }
+      done.collect { case (name, Right(a)) => name -> a }.toMap
+    } finally pool.shutdown()
   }
 
   /** The reference's three analytics outputs (`sql/transformation.sql`)

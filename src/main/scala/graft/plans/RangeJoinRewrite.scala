@@ -123,8 +123,19 @@ object RangeJoinRewrite extends Rule[LogicalPlan] {
       case _ => false
     }
 
+  private val ProbeName = "__graft_bucket"
+  private val BucketName = "__graft_rbucket"
+
+  /** True if `j` is this rule's own output. In a fixed-point batch
+    * `PushPredicateThroughJoin` pushes the range Filter back into the
+    * bucket join's condition, where it matches the pattern again; without
+    * this guard every iteration would bucket the join once more.
+    */
+  private def bucketed(j: Join): Boolean =
+    j.left.output.exists(_.name == ProbeName) || j.right.output.exists(_.name == BucketName)
+
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
-    case j @ Join(left, right, Inner, Some(cond), hint) =>
+    case j @ Join(left, right, Inner, Some(cond), hint) if !bucketed(j) =>
       val conjuncts = splitConjuncts(cond)
       val lower = conjuncts.flatMap(c => lowerBound(c, left, right).map(c -> _)).headOption
       val rewritten = lower.flatMap { case (lowC, (lOn, rOn, w)) =>
@@ -134,12 +145,12 @@ object RangeJoinRewrite extends Rule[LogicalPlan] {
         else {
           val rest = conjuncts.filterNot(c => (c eq lowC) || (c eq upper.get))
           // right side: its single bucket
-          val rBucketAlias = Alias(floorDiv(asLong(rOn), w), "__graft_rbucket")()
+          val rBucketAlias = Alias(floorDiv(asLong(rOn), w), BucketName)()
           val rightB = Project(right.output :+ rBucketAlias, right)
           val rBucket = rBucketAlias.toAttribute
           // left side: probe buckets b and b-1 via explode
           val lBucketE = floorDiv(asLong(lOn), w)
-          val probeAttr = AttributeReference("__graft_bucket", LongType, nullable = false)()
+          val probeAttr = AttributeReference(ProbeName, LongType, nullable = false)()
           val gen = Generate(
             Explode(CreateArray(Seq(lBucketE, Subtract(lBucketE, Literal(1L, LongType))))),
             unrequiredChildIndex = Nil, outer = false, qualifier = None,

@@ -252,7 +252,8 @@ class PipelineSpec extends AnyFunSuite {
       "shipment_id,order_id,shipment_date,delivery_date\n1,1,2022-01-10,\n")
     // sabotage: a garbage "parquet" in the shipments staging dir makes the
     // STAGING stage throw — but only AFTER the orders watermark append has
-    // already committed (Map elements evaluate in order, orders first).
+    // already committed (it runs beside the shipments append, and the stage
+    // waits for both before it fails).
     // This is the non-idempotent-append risk the Runner scaladoc claims
     // retries don't have: a stage that half-ran, then retried whole.
     val shipStage = java.nio.file.Paths.get(s"$work/staging/shipment_deliveries")
@@ -451,38 +452,51 @@ class PipelineSpec extends AnyFunSuite {
         |""".stripMargin)
   }
 
-  /** The Spark jobs `f` submits, counted by a listener. Two marker jobs
-    * fence the count: job ids are assigned in submission order and listener
-    * events arrive in order, so once the closing marker has been seen, every
-    * job with an id between the two markers was one of `f`'s.
+  /** Every job start (with its local properties) and job end a listener
+    * sees. [[fence]] runs a marker job and returns its id together with the
+    * jobs open (started, not ended) when its start arrived: listener events
+    * arrive in the order they were posted, so that snapshot covers exactly
+    * the events posted before the marker job was submitted.
     */
-  private def jobsOf(f: => Any): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val marker = s"graft-job-fence-${java.util.UUID.randomUUID}"
-    val ids = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val fences = new java.util.concurrent.LinkedBlockingQueue[Integer]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == marker))
-          fences.put(e.jobId)
-        else ids.add(e.jobId)
-    }
-    def fence(): Int = {
-      sc.setJobGroup(marker, "job-count fence")
+  private class JobLog extends org.apache.spark.scheduler.SparkListener {
+    import org.apache.spark.scheduler.{SparkListenerJobEnd, SparkListenerJobStart}
+    private val marker = s"graft-job-fence-${java.util.UUID.randomUUID}"
+    val started = new java.util.concurrent.ConcurrentHashMap[Int, java.util.Properties]()
+    private val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    private val fences = new java.util.concurrent.LinkedBlockingQueue[(Int, Set[Int])]()
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == marker))
+        fences.put(e.jobId -> (started.keySet.asScala.toSet -- ended.asScala))
+      else started.put(e.jobId, Option(e.properties).getOrElse(new java.util.Properties))
+    override def onJobEnd(e: SparkListenerJobEnd): Unit = ended.add(e.jobId)
+    def fence(): (Int, Set[Int]) = {
+      val sc = spark.sparkContext
+      sc.setJobGroup(marker, "job fence")
       try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val id = fences.poll(60, java.util.concurrent.TimeUnit.SECONDS)
-      assert(id != null, "fence job never reached the listener")
-      id.intValue
-    }
-    sc.addSparkListener(listener)
-    try {
-      val from = fence()
+      val f = fences.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+      assert(f != null, "fence job never reached the listener")
       f
-      val to = fence()
-      ids.asScala.count(id => id > from && id < to)
-    } finally sc.removeSparkListener(listener)
+    }
   }
+
+  /** The local properties of each Spark job `f` submits. Two fence jobs
+    * bound them: job ids are assigned in submission order, so once the
+    * closing fence has been seen, every job with an id between the two
+    * fences was one of `f`'s.
+    */
+  private def jobPropsOf(f: => Any): Seq[java.util.Properties] = {
+    val log = new JobLog
+    spark.sparkContext.addSparkListener(log)
+    try {
+      val (from, _) = log.fence()
+      f
+      val (to, _) = log.fence()
+      log.started.asScala.collect { case (id, p) if id > from && id < to => p }.toSeq
+    } finally spark.sparkContext.removeSparkListener(log)
+  }
+
+  /** The number of Spark jobs `f` submits. */
+  private def jobsOf(f: => Any): Int = jobPropsOf(f).size
 
   test("runner job budget: one run starts at most 24 Spark jobs on the fixture") {
     import graft.pipeline.Runner
@@ -562,6 +576,99 @@ class PipelineSpec extends AnyFunSuite {
     assert(Pipeline.fullAppend(spark, reviews, s, dedup = true) == 2L)
     assert(Pipeline.fullAppend(spark, reviews, s) == 3L)
     assert(spark.read.parquet(s).count() == 5L)
+  }
+
+  test("concurrent staging: a retried stage stages reviews exactly once") {
+    import graft.pipeline.Runner
+    val work = tmpDir()
+    landFixture(work)
+    // the shipments append fails on a garbage file while the orders append
+    // beside it commits; reviews must not have been appended by the failed
+    // attempt, or the retry would stage them twice
+    val shipStage = java.nio.file.Paths.get(s"$work/staging/shipment_deliveries")
+    Files.createDirectories(shipStage)
+    val garbage = shipStage.resolve("part-corrupt.parquet")
+    Files.writeString(garbage, "not a parquet footer")
+    val r = Runner.run(spark, work, "2026-01-01", retryDelayMs = 0L,
+      sleep = _ => Files.delete(garbage))
+    val text = Files.readString(java.nio.file.Paths.get(s"$work/error_log.txt"))
+    assert(text.contains("[staging] attempt 1/2 failed"), text)
+    assert(r.stagedRows == Map("orders" -> 0L, "shipment_deliveries" -> 2L, "reviews" -> 3L))
+    val reviews = spark.read.parquet(s"$work/staging/reviews")
+      .collect().map(x => (x.getInt(0), x.getInt(1))).toSeq.sorted
+    assert(reviews == Seq((4, 5), (5, 5), (5, 6)), s"landed reviews once: $reviews")
+  }
+
+  test("concurrent writes: a failed analytics write rethrows only after its siblings finish") {
+    import graft.pipeline.Runner
+    val work = tmpDir()
+    landFixture(work)
+    // staging appends never read reviews back, so the garbage file passes
+    // staging and fails only review_percentages in the transform, on both
+    // attempts; the other two analytics writes run beside it
+    val revStage = java.nio.file.Paths.get(s"$work/staging/reviews")
+    Files.createDirectories(revStage)
+    Files.writeString(revStage.resolve("part-corrupt.parquet"), "not a parquet footer")
+    def siblingsCommitted(): Boolean = Seq("agg_monthly_orders", "agg_shipments")
+      .forall(t => Files.exists(java.nio.file.Paths.get(s"$work/analytics/$t/_SUCCESS")))
+    val log = new JobLog
+    spark.sparkContext.addSparkListener(log)
+    try {
+      var atRetry = Option.empty[(Set[Int], Boolean)]
+      val e = intercept[Exception] {
+        Runner.run(spark, work, "2026-01-01", retryDelayMs = 0L,
+          sleep = _ => atRetry = Some(log.fence()._2 -> siblingsCommitted()))
+      }
+      val (_, openAtThrow) = log.fence()
+      assert(!e.isInstanceOf[java.util.concurrent.ExecutionException], e)
+      assert(openAtThrow.isEmpty, s"jobs still running at the throw: $openAtThrow")
+      assert(siblingsCommitted(), "sibling analytics writes finished before the throw")
+      assert(atRetry == Some(Set.empty[Int] -> true),
+        s"open jobs / siblings committed when the stage retried: $atRetry")
+      val lines = Files.readAllLines(java.nio.file.Paths.get(s"$work/error_log.txt")).asScala
+      assert(lines.size == 2 && lines.forall(_.contains("[transform] attempt ")), lines)
+      assert(lines(0).contains("attempt 1/2 failed") && lines(1).contains("attempt 2/2 failed"), lines)
+    } finally spark.sparkContext.removeSparkListener(log)
+  }
+
+  test("concurrent writes: every job of a run carries the caller's job group") {
+    import graft.pipeline.Runner
+    val work = tmpDir()
+    landFixture(work)
+    val sc = spark.sparkContext
+    val props = jobPropsOf {
+      sc.setJobGroup("graft-runner-caller", "caller's group")
+      try Runner.run(spark, work, "2026-01-01") finally sc.clearJobGroup()
+    }
+    assert(props.nonEmpty)
+    val groups = props.map(p => Option(p.getProperty("spark.jobGroup.id")))
+    assert(groups.forall(_.contains("graft-runner-caller")), s"job groups: $groups")
+  }
+
+  test("upsert and scd2 merge through a file: URI keep what a plain path keeps") {
+    import spark.implicits._
+    val dir = tmpDir()
+    def upserted(path: String): Set[(Int, String)] = {
+      Pipeline.upsert(spark, Seq((1, "a"), (2, "b")).toDF("order_id", "v"), "order_id", path)
+      Pipeline.upsert(spark, Seq((2, "B"), (3, "c")).toDF("order_id", "v"), "order_id", path)
+      spark.read.parquet(path).collect().map(r => r.getInt(0) -> r.getString(1)).toSet
+    }
+    val plain = upserted(s"$dir/upsert_plain")
+    assert(plain == Set(1 -> "a", 2 -> "B", 3 -> "c"))
+    assert(upserted(s"file://$dir/upsert_uri") == plain)
+
+    def ts(s: String) = java.sql.Timestamp.valueOf(s)
+    def merged(path: String): Set[(Int, String, Boolean, Option[java.sql.Timestamp])] = {
+      Pipeline.scd2Merge(spark, Seq((1, "gold"), (2, "silver")).toDF("id", "tier"), "id",
+        ts("2026-01-01 00:00:00"), path)
+      Pipeline.scd2Merge(spark, Seq((1, "platinum"), (3, "gold")).toDF("id", "tier"), "id",
+        ts("2026-01-02 00:00:00"), path)
+      spark.read.parquet(path).select("id", "tier", "is_current", "effective_to").collect()
+        .map(r => (r.getInt(0), r.getString(1), r.getBoolean(2), Option(r.getTimestamp(3)))).toSet
+    }
+    val plainScd = merged(s"$dir/scd2_plain")
+    assert(plainScd.size == 4, plainScd)
+    assert(merged(s"file://$dir/scd2_uri") == plainScd)
   }
 
   test("csv export round-trips with header") {

@@ -87,6 +87,24 @@ class RangeJoinRewriteSpec extends AnyFunSuite {
     } finally spark.experimental.extraOptimizations = Nil
   }
 
+  test("rule fires once in a fixed-point batch with PushPredicateThroughJoin") {
+    import org.apache.spark.sql.catalyst.optimizer.PushPredicateThroughJoin
+    import org.apache.spark.sql.catalyst.plans.logical.{Generate, LogicalPlan}
+    import org.apache.spark.sql.catalyst.rules.RuleExecutor
+    // the placement injectOptimizerRule gives the rule: a fixed-point batch
+    // in which the range Filter above the bucket join is pushed back into
+    // its condition, where the pattern would match again
+    object Optimize extends RuleExecutor[LogicalPlan] {
+      override protected def batches: Seq[Batch] = Seq(Batch("range join",
+        FixedPoint(20), graft.plans.RangeJoinRewrite, PushPredicateThroughJoin))
+    }
+    val plan = Optimize.execute(buildNaive().queryExecution.analyzed)
+    val probes = plan.collect {
+      case g: Generate if g.generatorOutput.exists(_.name == "__graft_bucket") => g
+    }
+    assert(probes.size == 1, s"expected one bucket probe, got ${probes.size}:\n$plan")
+  }
+
   test("rule leaves ordinary equi joins untouched") {
     spark.experimental.extraOptimizations = Seq(graft.plans.RangeJoinRewrite)
     try {

@@ -271,7 +271,10 @@ class Round15Spec extends AnyFunSuite {
       Seq("a a a", "b b b", "c c c"),                   // all distinct
       Seq("x y z"),                                     // singleton
       Seq(),                                            // empty
-      Seq("t u v", "t u v", "a b c", "t u v", "q r s")) // dominant at end
+      Seq("t u v", "t u v", "a b c", "t u v", "q r s"), // dominant at end
+      // a long document: 6000 grams, a third of them one repeated gram,
+      // the rest distinct (a fold that re-sorts per element takes minutes)
+      (0 until 6000).map(i => if (i % 3 == 0) "r e p" else s"w$i x y"))
     val df = fixtures.zipWithIndex
       .map { case (g, i) => (i.toLong, g) }.toDF("doc_id", "grams")
       .select(col("doc_id"), col("grams"), size(col("grams")).as("tot"),
