@@ -11,10 +11,21 @@ import graft.plans.AsOfJoinStrategy
   *
   *   spark.sql.extensions=graft.GraftExtensions
   *
-  * registers the engine's native functions (`array_cosine`, `array_dot`,
-  * `rolling_hash`) and the as-of-join planner strategy at session build
-  * time — the deployment-config twin of the per-call `register(spark)` /
-  * `GraftSqlShim.addStrategy` hooks the query builders use.
+  * At session build time it injects:
+  *  - five SQL functions: `array_cosine`, `array_dot`, `rolling_hash`,
+  *    `block_mean_hash`, and `bottom_k_sample` with a fixed k = 10;
+  *  - the as-of-join planner strategy ([[AsOfJoinStrategy]]);
+  *  - the [[graft.plans.RangeJoinRewrite]] optimizer rule, which nothing
+  *    else installs.
+  *
+  * It is not a superset of the per-call `register(spark)` /
+  * `GraftSqlShim.addStrategy` hooks the query builders use. Those hooks
+  * also register `block_gradient_hash`, `block_curvature_hash`,
+  * `window_hashes`, `byte_entropy`, `pcm_frame_energies`,
+  * `pcm_clip_count`, `pcm_level_crossings`, `bloom_filter_agg` and
+  * `might_contain`, none of which is injected here. And q26 registers
+  * `bottom_k_sample` with k = 5, replacing this k = 10 binding in its
+  * session.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {

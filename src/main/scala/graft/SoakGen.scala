@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   *    replicas never cross-join. `KeyOffset` is divisible by every
   *    modulus the queries select with (% 50 ANN queries, % 20 d8 eval
   *    split, % 2 d11 parity), so per-replica selections mirror rep 0.
-  *  - `documents` replicas get a unique tail token (the r3 Soak recipe):
+  *  - `documents` replicas get a unique tail token (the r3 soak recipe):
   *    replicas are NEAR-duplicates of their original — the hardest dedup
   *    case — but near-dup group size is capped at [[MaxNearDupGroup]]
   *    (r7): beyond 10× the GROUP COUNT grows with the factor, not the
@@ -26,13 +26,9 @@ import org.apache.spark.sql.functions._
   *    (near — not identical — vectors, so banded/bucketed candidate
   *    machinery does real work).
   *
-  * Usage: runMain graft.SoakGen [srcSfDir] [factor] [outDir] [--time-auto]
-  * `--time-auto` additionally times the auto-scaling d5/s3/d13/d14
-  * variants plus the d12 indexed probe on the generated corpus, and
-  * prints the pair-growth diagnostics the soak ledger judges the
-  * replica-quadratic operators by. Since r6 the registered queries
-  * auto-size from corpus statistics, so these timings coincide with the
-  * registered configurations at each scale.
+  * Usage: runMain graft.SoakGen [srcSfDir] [factor] [outDir]
+  * Time the registered queries on the result with
+  * `SPARK_GRAFT_SF_DIR=<outDir> runMain graft.Bench`.
   */
 object SoakGen {
   val KeyOffset = 10000000L // divisible by 50, 20, and 2 (see scaladoc)
@@ -47,7 +43,6 @@ object SoakGen {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factor = args.lift(1).map(_.toInt).getOrElse(10)
     val out = args.lift(2).getOrElse("/root/repo/soakdata/sf1")
-    val timeAuto = args.contains("--time-auto")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -62,8 +57,6 @@ object SoakGen {
     // BIGINT (µs-generation sources replicate their timestamp unchanged)
     // and Tables.events normalizes either encoding identically
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-
-    val onlyTime = args.contains("--only-time") // reuse an existing outDir
 
     val reps = spark.range(factor).select(col("id").as("rep"))
     def off(k: String) = (col(k) + col("rep") * lit(KeyOffset)).as(k)
@@ -87,7 +80,6 @@ object SoakGen {
       println(s"[soakgen] $table: ${factor}x written")
     }
 
-    if (!onlyTime) {
     Seq("region", "nation").foreach { t =>
       spark.read.parquet(s"$src/$t.parquet")
         .write.mode("overwrite").parquet(s"$out/$t.parquet")
@@ -159,80 +151,7 @@ object SoakGen {
       .repartition(outParts)
       .write.mode("overwrite").parquet(s"$out/embeddings.parquet")
     println(s"[soakgen] embeddings: ${factor}x written (noised replicas)")
-    }
 
-    if (timeAuto || onlyTime) {
-      def time(name: String)(f: => Long): Unit = {
-        val t0 = System.nanoTime()
-        val rows = f
-        println(f"[soakgen] $name%-24s ${(System.nanoTime() - t0) / 1e9}%8.1f s  $rows%10d rows")
-      }
-      time("d5_auto_banded") {
-        graft.operators.Dedup.embeddingNearDupPairs(spark, out).count()
-      }
-      time("s3_auto_cells") {
-        graft.operators.Similarity.annIvfTopK(spark, out).count()
-      }
-      time("d13_auto_banded") {
-        graft.operators.Dedup.incrementalEmbeddingDedup(spark, out,
-          bandBits = 0).count()
-      }
-      time("d14_auto_cells") {
-        val e = spark.read.parquet(s"$out/embeddings.parquet")
-        val n = e.count()
-        val nl = e.select("label").distinct().count()
-        graft.operators.Dedup.semanticDedup(spark, out,
-          subBits = graft.operators.Similarity.deriveSubBits(n, nl)).count()
-      }
-      time("d12_indexed_probe") {
-        graft.operators.Dedup.incrementalDedupIndexed(spark, out).count()
-      }
-      // r8: the s-family monitors the verdict flagged as the most
-      // plausible super-linear candidates (s13 composes the s1+s2
-      // retrieval stacks per run), plus their candidate-count
-      // diagnostics — the "judged per-candidate" columns of the ledger
-      time("s13_index_quality") {
-        graft.operators.Similarity.indexQualityReport(spark, out).count()
-      }
-      time("s12_silhouette") {
-        graft.operators.Similarity.labelSilhouette(spark, out).count()
-      }
-      time("s10_filtered_ann") {
-        graft.operators.Similarity.annFilteredTopK(spark, out).count()
-      }
-      locally {
-        val raw = graft.sources.Tables.embeddings(spark, out)
-        val lc = graft.operators.Similarity.lshCandidates(raw).count()
-        val ic = graft.operators.Similarity.ivfCandidates(raw, autoCells = true).count()
-        println(s"[soakgen] s1/s13 candidate pairs: lsh=$lc ivf=$ic")
-      }
-      // r6 batch-7 operators: row counts double as the pair-growth
-      // diagnostics (replica near-dups make true containment/cluster
-      // pairs grow ~factor² per group, like d2/d12 above)
-      time("d17_containment") {
-        graft.operators.Dedup.containmentPairs(spark, out).count()
-      }
-      time("d18_quality_surv") {
-        graft.operators.Dedup.qualitySurvivors(spark, out).count()
-      }
-      time("m6_media_clusters") {
-        graft.multimodal.Multimodal.mediaDedupClusters(spark, out).count()
-      }
-      // pair-growth diagnostics for the soak ledger: the replica design
-      // makes true near-dup GROUPS widen with the factor, so verified d12
-      // pairs (printed as rows above) and d14's within-cell pair
-      // evaluations (below) grow ~factor² while the corpus grows ~factor —
-      // soak wall-clock for those two is judged per-pair, not per-row
-      val eStats = graft.sources.Tables.embeddings(spark, out)
-        .agg(count(lit(1)), countDistinct(col("label"))).collect()(0)
-      val sb = graft.operators.Similarity.deriveSubBits(
-        eStats.getLong(0), eStats.getLong(1))
-      val (assigned, _) = graft.operators.Similarity.coarseQuantizer(
-        graft.sources.Tables.embeddings(spark, out), sb)
-      val cellPairs = assigned.groupBy("cent_id").count()
-        .agg(sum(col("count") * (col("count") - 1) / 2)).collect()(0).get(0)
-      println(s"[soakgen] d14 within-cell pair evaluations: $cellPairs")
-    }
     spark.stop()
   }
 }

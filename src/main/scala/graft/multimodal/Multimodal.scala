@@ -706,8 +706,7 @@ object Multimodal {
     * (doc_id, phash) frame — RAW band matches (multiplicity up to the
     * band count), each carrying both signatures so the Hamming verify
     * needs no join; callers filter first, THEN collapse multiplicity
-    * (see [[mediaNearDupPairs]]). `private[graft]` so [[graft.SoakDiag]]
-    * can count candidates at soak scale without duplicating the layout.
+    * (see [[mediaNearDupPairs]]).
     */
   private[graft] def mediaBandCandidates(hashes: DataFrame,
                                          maxHamming: Int): DataFrame = {
@@ -721,9 +720,7 @@ object Multimodal {
   }
 
   /** The m5/m6 band layout alone — `(doc_id, phash, band, bkey)`, one
-    * row per (doc, band). `private[graft]` so [[graft.SoakDiag]] can
-    * price the band join's output in closed form (Σ per-bucket C(s,2))
-    * without materializing it.
+    * row per (doc, band).
     */
   private[graft] def mediaBands(hashes: DataFrame,
                                 maxHamming: Int): DataFrame = {
@@ -1368,7 +1365,7 @@ object Multimodal {
     *
     * BREAK-EVEN — when NOT to build this index (the d28 convention): on
     * the soak fixture the probe and the fresh recompute measure
-    * near-parity walls at every scale (`soakdiag_r13_m18.log`: 2.5 vs
+    * near-parity walls at every scale (`soakdiag_r13_m18.log` at bec8540: 2.5 vs
     * 2.2 s / 5.2 vs 6.7 / 5.1 vs 5.5), because the three hash folds a
     * probe skips are ~free over small UTF-8 payloads — so for a corpus
     * of THIS shape, batch-probed once, the index lifecycle buys nothing
@@ -1423,8 +1420,8 @@ object Multimodal {
     incrementalMediaFromIndex(spark, dir, prefix, batchFilter = lit(true))
   }
 
-  /** The fresh-recompute twin the index amortizes against (unregistered —
-    * [[graft.SoakDiag]] prices probe-vs-recompute with it): both sides
+  /** The fresh-recompute twin the index amortizes against (unregistered;
+    * MediaIndexSpec checks the probe against it): both sides
     * fingerprinted in this pass, banded at the width the CORPUS side's
     * count derives, cross pairs only. Same output as the index probe.
     */
@@ -1554,7 +1551,7 @@ object Multimodal {
     * signature bits too, so on a dup-heavy corpus the ratio saturates at
     * (true + random_frozen)/(true + random_fresh) — the r13 soak's
     * replica-tail corpus measures 1.43–1.48 at a one-bit-stale width at
-    * all three scales (`soakdiag_r13_m18.log`) and correctly KEEPs,
+    * all three scales (`soakdiag_r13_m18.log` at bec8540) and correctly KEEPs,
     * because most of its probe cost is unavoidable verify work on
     * genuine twins. Payback when it does fire: at ratio 2 half of every
     * probe's candidate work is removable, and the rebuild re-bands

@@ -29,27 +29,14 @@ object Dedup {
     * caches it was built from. Queries must not leak CacheManager entries
     * across invocations: Bench runs every query twice per round and a
     * long-lived session would otherwise accumulate memory/disk pressure.
-    *
-    * Under [[graft.operators.PlanCapture.noRelease]] (set ONLY by the
-    * `graft.Explain` dev tool, never by Bench/Verify) the checkpoint is
-    * skipped so `explain("formatted")` prints the real computation
-    * instead of a one-line ExistingRDD scan — r15's plan-evidence fix.
-    * The caches deliberately stay REGISTERED under the flag (their
-    * InMemoryRelation barriers are part of the plan being printed), so a
-    * full-suite Explain session accumulates them; `graft.Explain` clears
-    * the cache manager between queries to stay bounded.
+    * A checkpointed frame's `explain` is one `Scan ExistingRDD` line; to
+    * inspect the live plan, call the query with `release = false`.
     */
   private[graft] def materializeAndRelease(result: DataFrame,
                                            caches: DataFrame*): DataFrame = {
-    if (PlanCapture.noRelease) result  // caches stay REGISTERED: the
-    // InMemoryRelation barriers are part of the real plan shape (they stop
-    // InferFiltersFromGenerate pushing the shingle pipeline below the
-    // repartition); unpersisting here would print a plan the bench never runs
-    else {
-      val out = result.localCheckpoint()
-      caches.foreach(_.unpersist())
-      out
-    }
+    val out = result.localCheckpoint()
+    caches.foreach(_.unpersist())
+    out
   }
 
   /** Align a frame to its bucket spec before a bucketed write (r16,
@@ -161,10 +148,7 @@ object Dedup {
 
   /** Shared d2/d24 candidate stage: the prefix-filtered (AllPairs)
     * candidate pairs at `threshold`, plus the two caches — shingled docs
-    * and exploded prefix — the caller must release. `private[graft]` so
-    * the soak-diagnostics ledger ([[graft.SoakDiag]]) can count
-    * candidates (the quantity the verify join's shuffle scales with)
-    * without duplicating the pipeline.
+    * and exploded prefix — the caller must release.
     */
   private[graft] def ngramCandidates(spark: SparkSession, dir: String,
       threshold: Double): (DataFrame, DataFrame, DataFrame) =
@@ -404,7 +388,7 @@ object Dedup {
     * partition sizing the r11 st10 control measured, r12), and
     * `st9_funnel_partitions` (the same clamp over
     * [[graft.streaming.Events.funnelStateHorizonKeys]] — the funnel's
-    * busiest adjacent-2-day key count, promoted from SoakDiag's ad-hoc
+    * busiest adjacent-2-day key count, promoted from an ad-hoc
     * derivation in r13 so every streaming query's sizing input is a
     * replayed row). Empty corpus → each parameter's documented floor
     * (3 / 8 / 0 / 1 µs / 1 partition / 1 partition), never an error. The one derived dial deliberately NOT a report row
@@ -712,9 +696,7 @@ object Dedup {
   /** @param batchFilter which documents form the arriving batch (must
     *        select a subset of the ODD ids so the parity-based output
     *        orientation holds). Default: the full odd half — the
-    *        test-parity split shared with d11/d28; [[graft.SoakDiag]]
-    *        passes a 0.5% slice to price the per-batch cost asymmetry
-    *        between this recompute form and d28's index probe.
+    *        test-parity split shared with d11/d28.
     */
   def incrementalContainmentDedup(spark: SparkSession, dir: String,
                                   threshold: Double = 0.8,
@@ -735,14 +717,12 @@ object Dedup {
     if (release) materializeAndRelease(result, caches: _*) else result
   }
 
-  /** d27's candidate generation + exact verification, exposed like
-    * [[containmentVerified]] so [[graft.SoakDiag]] can count the
-    * cross-boundary candidates (the verify join's input) and the verified
-    * pairs at soak scale without duplicating the probe. Returns every
-    * surviving candidate with its raw `containment` plus the caches to
-    * release; [[incrementalContainmentDedup]] filters and shapes.
+  /** d27's candidate generation + exact verification, split out like
+    * [[containmentVerified]]. Returns every surviving candidate with its
+    * raw `containment` plus the caches to release;
+    * [[incrementalContainmentDedup]] filters and shapes.
     */
-  private[graft] def incrementalContainmentVerified(
+  private def incrementalContainmentVerified(
       spark: SparkSession, dir: String,
       threshold: Double,
       batchFilter: org.apache.spark.sql.Column =
@@ -1030,8 +1010,8 @@ object Dedup {
 
   /** [[incrementalContainmentFromIndex]] with the internal batch-side
     * caches returned to the caller — the [[incrementalContainmentVerified]]
-    * convention, so a `release = false` caller (plan-inspection specs,
-    * [[graft.SoakDiag]]) can unpersist them instead of leaking two cached
+    * convention, so a `release = false` caller (plan-inspection specs)
+    * can unpersist them instead of leaking two cached
     * frames for the session.
     */
   private[graft] def incrementalContainmentFromIndexVerified(
@@ -2211,8 +2191,6 @@ object Dedup {
     * band count), each carrying both signatures (`sh_a`, `sh_b`) so the
     * caller's Hamming verify needs no join; callers filter first, THEN
     * collapse multiplicity (see [[simhashNearDupPairs]]).
-    * `private[graft]` so [[graft.SoakDiag]] can count candidates at soak
-    * scale without duplicating the band layout.
     */
   private[graft] def simhashCandidates(sigs: DataFrame): DataFrame = {
     val bands = simhashBands(sigs)
@@ -2225,11 +2203,9 @@ object Dedup {
   }
 
   /** The d9 band layout alone — `(doc_id, simhash, band, bkey)`, one row
-    * per (doc, band). `private[graft]` so [[graft.SoakDiag]] can price
-    * the band join's output in closed form (Σ per-bucket C(s,2)) without
-    * materializing it.
+    * per (doc, band).
     */
-  private[graft] def simhashBands(sigs: DataFrame): DataFrame = {
+  private def simhashBands(sigs: DataFrame): DataFrame = {
     val bandBits = SimHashBits / 4 // 13-bit bands
     sigs.select(col("doc_id"), col("simhash"),
         explode(sequence(lit(0), lit(3))).as("band"))
@@ -2323,8 +2299,8 @@ object Dedup {
     * FULL 52+4e-bit signature → some chunk agrees exactly) holds
     * unchanged.
     */
-  private[graft] def simhashBandsWide(sigs: DataFrame,
-                                      extraBits: Int): DataFrame =
+  private def simhashBandsWide(sigs: DataFrame,
+                              extraBits: Int): DataFrame =
     sigs.select(col("doc_id"), col("simhash"), col("simhash2"),
         explode(sequence(lit(0), lit(3))).as("band"))
       .select(col("doc_id"), col("simhash"), col("simhash2"), col("band"),
@@ -2355,8 +2331,8 @@ object Dedup {
     * largest bucket, and the closed-form band-join collision volume
     * Σ per-bucket C(s,2) — exactly the row count the d9 candidate
     * equi-join emits, priced at O(n). This is the observability face of
-    * the width derivation: the saturation diagnosis [[graft.SoakDiag]]
-    * runs at soak scale, registered as an oracle-gated query (the d24/
+    * the width derivation: the saturation diagnosis of the soak runs,
+    * registered as an oracle-gated query (the d24/
     * d26/t33 report pattern), so an operator can SEE whether the corpus
     * is width-bound (occupancy falls as keys widen) or pair-structure-
     * bound (big buckets are identical-signature replica clusters that
@@ -2413,9 +2389,8 @@ object Dedup {
     * derived [[DriftRebuildRatio]] threshold, replayed bit-for-bit by
     * the DuckDB twin like every other verdict column. The registered
     * fixture freezes over the even half (the d27/d28 corpus) with the
-    * odd half appended; SoakDiag's d30 section sweeps the appended
-    * fraction × scale and reports the verdict flipping as staleness
-    * grows (measured r12: ratio 1.19→1.48 across staleness at sf1 —
+    * odd half appended. A sweep of the appended fraction × scale showed
+    * the verdict flipping as staleness grows (measured r12: ratio 1.19→1.48 across staleness at sf1 —
     * never worth a rebuild — flipping past the threshold at sf3's
     * 7/8-stale 2.01 and sf10's 2.42/3.76).
     *

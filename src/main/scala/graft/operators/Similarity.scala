@@ -1403,7 +1403,7 @@ object Similarity {
     * so once corpus growth pushes the fresh derivation past a power-of-2
     * boundary a rebuild doubles the cells and roughly halves per-probe
     * candidate volume — the soak fixture shows exactly that
-    * (`soakdiag_r13_s16.log`: half-stale ratio 1.99/2.05 at sf1/sf3
+    * (`soakdiag_r13_s16.log` at bec8540: half-stale ratio 1.99/2.05 at sf1/sf3
     * where the boundary IS crossed, 1.0007 at sf10 where it is not —
     * and the sf3 verdict flips to REBUILD right at the threshold).
     * Payback at ratio 2: every probe pays ≈ 1 extra probe-cost of
@@ -2007,7 +2007,7 @@ object Similarity {
     * skeleton, all kill-tested in Round15Spec.
     *
     * BREAK-EVEN — when NOT to build this index (the d28/m18/s16
-    * convention, measured in `soakdiag_r15_s22.log`): on the soak
+    * convention, measured in `soakdiag_r15_s22.log` at bec8540): on the soak
     * fixture the composed probe reaches WALL-PARITY with the fresh
     * recomputes (probe 3.7/5.1/11.6 s vs s5 4.9/5.9/11.0 and s6
     * 4.0/5.5/12.0 at sf1/3/10 — after the r15 [[pqDenseCbOf]] fix
@@ -2435,7 +2435,7 @@ object Similarity {
     * when either component's own threshold trips, i.e. exactly when the
     * s23 row's `rebuild_recommended` is 1 (pinned in Round15Spec).
     * `rebuildRatio` is on that NORMALIZED scale (1.0 = the composed
-    * policy, 0.0 = forced act — the SoakDiag cutover-wall convention).
+    * policy, 0.0 = forced act).
     */
   def rotateIvfPqIndex(spark: SparkSession,
                        alias: String = "ivfpq_index_live",

@@ -735,8 +735,7 @@ object TextAnalysis {
         round(col("raw_nll") + 1e-9, 4).as("avg_nll_bits"),
         round(pow(lit(2.0), col("raw_nll")) + 1e-9, 2).as("ppl"))
       .orderBy(col("doc_id"))
-    if (release && !PlanCapture.noRelease) { val out = result.localCheckpoint(); toks.unpersist(); out }
-    else result
+    if (release) Dedup.materializeAndRelease(result, toks) else result
   }
 
   /** t21: Zipf rank-frequency fit — the corpus-health diagnostic: natural
@@ -782,8 +781,7 @@ object TextAnalysis {
           .as("intercept"),
         round(col("sxy") * col("sxy") / (col("sxx") * col("syy")) + 1e-9, 4)
           .as("r2"))
-    if (release && !PlanCapture.noRelease) { val out = result.localCheckpoint(); tf.unpersist(); out }
-    else result
+    if (release) Dedup.materializeAndRelease(result, tf) else result
   }
 
   /** Rank-group bound for [[zipfRanked]]: a window partition never holds
@@ -1023,10 +1021,7 @@ object TextAnalysis {
       .select(col("doc_id"), col("n_bigrams"),
         round(col("raw") + 1e-9, 4).as("log_weight"))
       .orderBy(col("doc_id"))
-    if (release && !PlanCapture.noRelease) {
-      val out = result.localCheckpoint()
-      toks.unpersist(); db.unpersist(); out
-    } else result
+    if (release) Dedup.materializeAndRelease(result, toks, db) else result
   }
 
   /** The Gopher required-stopword list (Rae et al. 2021, A1.1): a document
@@ -1424,8 +1419,7 @@ object TextAnalysis {
         round(col("covered_tokens").cast("double") / col("tot") + 1e-9, 6)
           .as("coverage"))
       .orderBy(col("k"))
-    if (release && !PlanCapture.noRelease) { val out = result.localCheckpoint(); tf.unpersist(); out }
-    else result
+    if (release) Dedup.materializeAndRelease(result, tf) else result
   }
 
   /** The t33 sweep grid — the candidate quality cuts a curation pass is
@@ -1482,11 +1476,7 @@ object TextAnalysis {
         if (nTokens == 0) lit(0.0)
         else round(col("n_tokens_kept").cast("double") / nTokens + 1e-9, 6))
       .orderBy(col("threshold"))
-    if (PlanCapture.noRelease) grid else {
-      val out = grid.localCheckpoint()
-      stats.unpersist()
-      out
-    }
+    Dedup.materializeAndRelease(grid, stats)
   }
 
   /** t35's budget grid — corpus-token fractions to price. Interpolated
@@ -1602,11 +1592,6 @@ object TextAnalysis {
       s"stack(${fracs.size}, $stackArgs) AS " +
         "(budget_frac, budget_tokens, kept_docs, kept_tokens, cut_quality)"))
       .orderBy(col("budget_frac"))
-    if (PlanCapture.noRelease) curve
-    else {
-      val out = curve.localCheckpoint()
-      ranked.unpersist(); base.unpersist()
-      out
-    }
+    Dedup.materializeAndRelease(curve, ranked, base)
   }
 }

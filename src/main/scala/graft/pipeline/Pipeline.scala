@@ -350,37 +350,42 @@ object Pipeline {
   /** Small-file compaction: rewrite a staged directory into
     * ceil(bytes / targetBytes) files. Streaming/incremental appends
     * accumulate small files; periodic compaction keeps scan parallelism
-    * aligned with data size instead of append count.
+    * aligned with data size instead of append count. Sizing and the swap
+    * go through the Hadoop FileSystem, so `file:`, `s3a:` and `hdfs:` URIs
+    * work as plain paths do.
     */
   def compact(spark: SparkSession, stagingPath: String,
               targetBytes: Long = 128L * 1024 * 1024): Int = {
-    val dir = new java.io.File(stagingPath)
-    val bytes = Option(dir.listFiles()).map(_.map(_.length).sum).getOrElse(0L)
+    val bytes = stagedFiles(spark, stagingPath).map(_.getLen).sum
     val nFiles = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
     val df = spark.read.parquet(stagingPath)
-    val tmp = stagingPath + "__compacting"
-    df.repartition(nFiles).write.mode(SaveMode.Overwrite).parquet(tmp)
-    // atomic-ish swap: every rename is checked, and a failed second rename
-    // restores the backup so the staged table is never left missing
-    val target = new java.io.File(stagingPath)
-    val backup = new java.io.File(stagingPath + "__old")
-    if (backup.exists()) scala.reflect.io.Directory(backup).deleteRecursively()
-    if (!target.renameTo(backup))
+    val target = new Path(stagingPath)
+    val tmp = target.suffix("__compacting")
+    val backup = target.suffix("__old")
+    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    df.repartition(nFiles).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+    // atomic-ish swap: every rename is checked, a failed second rename
+    // restores the backup so the staged table is never left missing, and
+    // a failed swap removes the compacted copy
+    fs.delete(backup, true)
+    if (!fs.rename(target, backup)) {
+      fs.delete(tmp, true)
       throw new java.io.IOException(
         s"compact: could not move $stagingPath aside to $backup; staging left untouched")
-    if (!new java.io.File(tmp).renameTo(target)) {
-      val restored = backup.renameTo(target)
+    }
+    if (!fs.rename(tmp, target)) {
+      val restored = fs.rename(backup, target)
+      fs.delete(tmp, true)
       throw new java.io.IOException(
         s"compact: could not move $tmp into place" +
           (if (restored) "; original data restored"
            else s"; RESTORE FAILED — original data is at $backup"))
     }
     // only drop the backup once the new directory is confirmed readable
-    val swapped = Option(target.listFiles()).exists(_.exists(_.getName.endsWith(".parquet")))
-    if (!swapped)
+    if (!fs.listStatus(target).exists(_.getPath.getName.endsWith(".parquet")))
       throw new java.io.IOException(
         s"compact: swapped directory $target has no parquet files; backup kept at $backup")
-    scala.reflect.io.Directory(backup).deleteRecursively()
+    fs.delete(backup, true)
     nFiles
   }
 }

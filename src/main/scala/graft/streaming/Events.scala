@@ -619,8 +619,10 @@ object Events {
     */
   case class FunnelState(viewUs: Long, clickUs: Long, purchaseUs: Long,
                          emitted: Int)
-  case class FunnelStageRow(user_id: Long, day: java.sql.Date,
-                            clicked: Boolean, purchased: Boolean)
+  private[graft] case class FunnelStageRow(user_id: Long,
+                                           day: java.sql.Date,
+                                           clicked: Boolean,
+                                           purchased: Boolean)
 
   /** st9: per-(user, day) strict funnel stages via EXPLICIT state — the
     * `flatMapGroupsWithState` form of q57's view→click→purchase chain: a
@@ -712,8 +714,8 @@ object Events {
   /** st9's PRODUCTION streaming configuration — the same funnel machine
     * armed with the event-time timeout its scaladoc prescribes: the input
     * declares a watermark at a caller-supplied delay (no pinned literal —
-    * production callers pass the derived d26 dial, as SoakDiag's st9
-    * section does; fixtures pass their own), each live (user, day) key
+    * production callers pass the derived d26 dial; fixtures pass their
+    * own), each live (user, day) key
     * sets its timeout at the END of its day, and when the watermark
     * passes that boundary the key's state is REMOVED (proven by
     * state-row counts in StreamingSpec).
@@ -891,8 +893,7 @@ object Events {
   /** Shuffle partitions a stateful streaming job should run at, derived
     * from its expected state rows — a [[graft.operators.Dedup.autoConfigReport]]
     * row (`st_shuffle_partitions`, replayed by the DuckDB twin) fed by
-    * [[attributionStateHorizonRows]]; SoakDiag's st10/st11 sections run
-    * AT this setting. Clamped to [1, maxPartitions] (the session's
+    * [[attributionStateHorizonRows]]. Clamped to [1, maxPartitions] (the session's
     * parallelism — more stores than cores is pure instance overhead).
     */
   def deriveStatefulShufflePartitions(stateRows: Long,
@@ -910,8 +911,7 @@ object Events {
     * session conf that fixes a streaming query's state-store partition
     * count at its FIRST run (it is then pinned in the checkpoint), so
     * production callers wrap query construction + start in this.
-    * SoakDiag's streaming sections run through the same discipline; the
-    * measured payoff at soak sf1–sf10 is 3–4× wall on the stream-stream
+    * The measured payoff at soak sf1–sf10 is 3–4× wall on the stream-stream
     * joins at identical output and state.
     */
   def withDerivedStatefulPartitions[A](spark: SparkSession, dir: String,
@@ -931,8 +931,8 @@ object Events {
     * click+purchase rows — the event-time bound on what the symmetric
     * hash join must retain (each side's rows live until the other side's
     * watermark passes their match horizon). Arrival granularity can
-    * raise the real peak above this floor (eviction lags one micro-batch;
-    * SoakDiag measures actual peaks alongside), but the horizon count is
+    * raise the real peak above this floor (eviction lags one
+    * micro-batch), but the horizon count is
     * the corpus-derivable sizing input. Spelled as 10-minute cells + a
     * sliding 8-cell max so the DuckDB twin replays it exactly — 8, not
     * 7, because any 70-minute interval intersects at most ⌈70/10⌉+1 = 8
@@ -960,7 +960,7 @@ object Events {
   }
 
   /** st9's state-rows input (r12 verdict "next" #6 — promoted from
-    * SoakDiag's ad-hoc derivation to a first-class replayed dial): the
+    * an ad-hoc soak derivation to a first-class replayed dial): the
     * busiest calendar-adjacent-2-day distinct-user key count. The
     * funnel's state is one row per live (user, day) key, and a key
     * expires when the watermark passes its day + timeout — so peak state
@@ -1023,10 +1023,10 @@ object Events {
     * — the r12 fold was an O(F²) filter-per-file, fine for a staged
     * replay's thousands of part files but 10¹⁰⁺ driver comparisons at a
     * 10⁵–10⁶-file backfill). Single file or empty → the 1 µs floor. The
-    * streaming twins take the MAX of both dials ([[twinDelayUs]]);
-    * SoakDiag's staged replays measure 0 here by construction
-    * (`orderArrival`), so any staging regression surfaces as a huge
-    * derived delay instead of silent row loss.
+    * streaming twins take the MAX of both dials ([[twinDelayUs]]); a
+    * replay staged with ascending part-file mtimes measures 0 here by
+    * construction, so any staging regression surfaces as a huge derived
+    * delay instead of silent row loss.
     */
   def deriveFileArrivalDelayUs(spark: SparkSession, dir: String): Long = {
     val perFile = Tables.events(spark, dir)
@@ -1184,7 +1184,7 @@ object Events {
     * what lets the symmetric-hash join EVICT state — a click older than
     * `purchase watermark − window` can never match again.
     *
-    * Deployment note (measured, `soakdiag_r11_streaming.log`): the
+    * Deployment note (measured, `soakdiag_r11_streaming.log` at bec8540): the
     * streaming form's per-batch overhead scales with the state-store
     * instance count (shuffle partitions × 4 join stores × batches of
     * commit/snapshot work) — the identical soak run at 8 vs 32 shuffle
@@ -1340,8 +1340,7 @@ object Events {
     * 64 ts-sorted files: the two-source form silently emitted 930 of
     * 3,710 pairs — exactly the pairs of the files both sources happened to
     * deliver in the same trigger; the one-source form emits all of them
-    * (SoakDiag's st10 section asserts streamed = batch count at every soak
-    * scale). The inner join with the event-time range condition is the
+    * (streamed = batch count at every soak scale). The inner join with the event-time range condition is the
     * canonical Spark stream-stream join: each side's state is retained
     * only while the other side's watermark still admits a match inside
     * the window, then evicted (StreamingSpec proves the eviction on a
@@ -1406,8 +1405,7 @@ object Events {
     *     retires as one permanent state row when the query stops.
     *
     * Emitted rows therefore equal the batch query's EXACTLY
-    * (StreamingSpec pins it, including sentinel absence; SoakDiag's st11
-    * section asserts it at soak scale).
+    * (StreamingSpec pins it, including sentinel absence).
     *
     * The second bullet assumes the GLOBAL watermark is the MINIMUM of
     * the per-column watermarks — Spark's default

@@ -210,7 +210,7 @@ object FiguresSpec {
   /** Cross-window swing factor on multi-second dedup rows, measured three
     * rounds running: d15 3.00→1.53 s and d12 2.93→1.12 s between the r12
     * commit and the driver's post-commit rerun, d17 149→279 s in-suite vs
-    * isolated at sf10 (`soak100_recheck_r12.json`) — heavy shuffle rows
+    * isolated at sf10 (`soak100_recheck_r12.json` at bec8540) — heavy shuffle rows
     * move ~2× with page cache in BOTH directions. The slowest-five check
     * treats anything within one swing of the five-boundary as weather.
     */

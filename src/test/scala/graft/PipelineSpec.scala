@@ -349,6 +349,19 @@ class PipelineSpec extends AnyFunSuite {
     val filesAfter = new java.io.File(staging).listFiles().count(_.getName.endsWith(".parquet"))
     assert(after == before, "compaction must not change content")
     assert(filesAfter == n && filesAfter < filesBefore)
+
+    // the same appends staged under a file: URI compact the same way
+    val uri = s"file://$dir/stage_compact_uri"
+    (1 to 6).foreach { i =>
+      Seq((i, s"v$i")).toDF("k", "v").repartition(3)
+        .write.mode("append").parquet(uri)
+    }
+    val nUri = Pipeline.compact(spark, uri)
+    assert(spark.read.parquet(uri).collect().toSet == before)
+    val uriFiles = new java.io.File(s"$dir/stage_compact_uri").listFiles()
+    assert(uriFiles.count(_.getName.endsWith(".parquet")) == nUri && nUri == n)
+    val leftover = new java.io.File(dir).list().filter(_.contains("__"))
+    assert(leftover.isEmpty, s"compaction left ${leftover.mkString(", ")} behind")
   }
 
   test("every query has a DuckDB oracle — no rows-only gaps") {

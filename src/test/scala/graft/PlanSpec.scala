@@ -293,6 +293,29 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
+  test("release on: the TextAnalysis checkpoint-and-release queries leave no cache entry") {
+    import graft.operators.TextAnalysis
+    val cm = spark.sharedState.cacheManager
+    // numCachedEntries is private[sql] to Scala callers, public on the JVM
+    val entries = classOf[org.apache.spark.sql.execution.CacheManager]
+      .getMethod("numCachedEntries")
+    def cached: Int = entries.invoke(cm).asInstanceOf[Int]
+    val before = cached
+    Seq[(String, () => DataFrame)](
+      "t20_lm_perplexity" -> (() => TextAnalysis.ngramLmPerplexity(spark, sf)),
+      "t21_zipf_fit" -> (() => TextAnalysis.zipfFit(spark, sf)),
+      "t23_dsir_weights" -> (() => TextAnalysis.dsirWeights(spark, sf)),
+      "t32_coverage_curve" -> (() => TextAnalysis.coverageCurve(spark, sf)),
+      "t33_quality_sweep" -> (() => TextAnalysis.qualityThresholdSweep(spark, sf)),
+      "t35_token_budget" -> (() => TextAnalysis.tokenBudgetCurve(spark, sf))
+    ).foreach { case (name, run) =>
+      assert(run().collect().nonEmpty, s"$name returned no rows")
+      // <=, not ==: a plan an earlier release = false call left cached is
+      // shared, so this query's release may drop that entry too
+      assert(cached <= before, s"$name left a CacheManager entry behind")
+    }
+  }
+
   test("no registered query plans an empty-partition (single-partition) window") {
     // Window.partitionBy() funnels the whole input through ONE partition —
     // the t11/q44 scale-killer shape. After rewriting q44 to the scalar-

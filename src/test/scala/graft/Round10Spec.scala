@@ -157,7 +157,7 @@ class Round10Spec extends AnyFunSuite {
   test("d29 collision_rows is exactly the d9 band join's output volume") {
     // the audit's closed-form Σ C(s,2) must equal what the candidate
     // equi-join actually emits — the invariant that makes d29 a
-    // trustworthy price tag for d9 (and SoakDiag's pricing correct)
+    // trustworthy price tag for d9
     val audit = Dedup.bandOccupancyAudit(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     assert(audit.map(_._1).toSeq == Seq(0L, 1L, 2L, 3L), "one row per band")

@@ -158,8 +158,8 @@ class Round11Spec extends AnyFunSuite {
     // slot must ~quadruple the closed-form band volume AT THE FROZEN
     // 6-bit width — the cost curve that motivates the curvature funding
     // (wide2 restores ~2× per extra bit). Kept at test scale (2^15 →
-    // 2^16 docs); graft.SoakDiag's m6cap section prices the real
-    // 2^19/2^20 boundary corpus, frozen vs funded, in the soak ledger.
+    // 2^16 docs); the r11 soak ledger priced the real 2^19/2^20
+    // boundary corpus, frozen vs funded.
     def volumeAt(n: Long): Long =
       Multimodal.mediaBandsWide(
           spark.range(n).select(col("id").as("doc_id"),

@@ -135,7 +135,7 @@ class Round13Spec extends AnyFunSuite {
     assert(rows("st9_funnel_partitions") ==
       ((k, Events.deriveStatefulShufflePartitions(k).toLong)),
       s"report row ${rows("st9_funnel_partitions")} != derivation over $k")
-    // the promoted dial must equal the ad-hoc form SoakDiag used through
+    // the promoted dial must equal the ad-hoc form the soaks used through
     // r12 (per-day distinct users, max over adjacent-day sums) on a
     // contiguous-day corpus — the r9-r12 soak anchors (80880 at sf3,
     // 269600 at sf10, peaks 0.85-0.86x) price exactly this number

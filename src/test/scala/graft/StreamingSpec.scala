@@ -750,7 +750,7 @@ class StreamingSpec extends AnyFunSuite {
     // whole files' pairs to the watermark — streamingAttributedPairs
     // therefore branches ONE source; (2) parallel-written part files have
     // random mtimes, so a ts-sorted staged corpus still ARRIVES shuffled
-    // unless mtimes are forced ascending (SoakDiag.orderArrival). This
+    // unless mtimes are forced ascending. This
     // drives the one-source join through 8 genuinely ordered micro-batches
     // and asserts nothing is lost.
     import org.apache.spark.sql.functions._
@@ -1011,7 +1011,7 @@ class StreamingSpec extends AnyFunSuite {
     // a user_id filter would be pushed below the watermark node into the
     // scan and neuter the drain; sentinels are invisible by
     // construction, see drainSentinelEvents), multi-batch via the same
-    // one-source construction SoakDiag drives
+    // one-source construction the soak replays drove
     val schema = spark.read.parquet(s"$staged/events.parquet").schema
     val src = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(s"$staged/events.parquet")
