@@ -126,7 +126,11 @@ object Bench {
     val notRun = SparkEntry.queries.keys.toSeq.sorted
       .filterNot(selected.toSet)
       .map("\"" + _ + "\"").mkString("[", ",", "]")
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","cpus":$cpus,"queries":$qs,""" +
+    // the revision the sweep ran, so the artifact says what it measured
+    val gitRev = scala.util.Try(scala.sys.process.Process(Seq("git", "rev-parse", "HEAD"))
+      .!!(scala.sys.process.ProcessLogger(_ => ())).trim).toOption.filter(_.nonEmpty)
+      .getOrElse("unknown")
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","cpus":$cpus,"git_rev":"$gitRev","queries":$qs,""" +
       s""""spread":$spreads,"iters":$iters,"n_failed":${failed.size},""" +
       s""""failed":${failed.mkString("[", ",", "]")},"skipped":$notRun,"sf":"$sfDir"}"""
     println(json)

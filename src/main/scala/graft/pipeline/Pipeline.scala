@@ -18,7 +18,11 @@ import org.apache.spark.sql.types._
   *               — nondeterministic at scale, so we pin).
   *  - staging:   incremental watermark append — only rows with pk > MAX(pk)
   *               already staged (`:95-107`), or full append for tables
-  *               without a usable key (reviews, `:109-113`).
+  *               without a usable key (reviews, `:109-113`). A caller that
+  *               must not publish before a check passes writes the batch
+  *               aside ([[watermarkAppendAside]], or [[fullAppend]] into
+  *               the aside directory) and moves the files into the staged
+  *               table with [[publish]] once it may.
   *  - transform: the analytics queries (graft.operators.*), or a verbatim
   *               SQL script via [[SqlScriptRunner]] (`:120-134`).
   *  - export:    header'd CSV per analytics table (`:136-160`).
@@ -152,10 +156,39 @@ object Pipeline {
     * it. A batch with nothing new still commits, as one zero-row file.
     */
   def watermarkAppend(spark: SparkSession, incoming: DataFrame, pk: String,
-                      stagingPath: String): Long = {
+                      stagingPath: String): Long =
+    watermarkAppendAside(spark, incoming, pk, stagingPath, stagingPath)
+
+  /** [[watermarkAppend]] with the rows above the watermark of `stagingPath`
+    * written to `aside` instead, for [[publish]] to move into the staged
+    * table later. The watermark is read from the staged table alone, so
+    * nothing written aside moves it.
+    */
+  private[pipeline] def watermarkAppendAside(spark: SparkSession, incoming: DataFrame,
+                                             pk: String, stagingPath: String,
+                                             aside: String): Long = {
     val max = stagedWatermark(spark, stagingPath, pk)
     writeCounted(incoming.filter(col(pk).cast("long") > max))(
-      _.write.mode(SaveMode.Append).parquet(stagingPath))
+      _.write.mode(SaveMode.Append).parquet(aside))
+  }
+
+  /** Moves the data files written to `aside` into the staged table at
+    * `stagingPath`, one Hadoop FileSystem rename per file, so `file:`,
+    * `s3a:` and `hdfs:` URIs work as plain paths do. Spark's part-file names
+    * carry the id of the write that made them, so they never collide with a
+    * file already staged. Committer markers (`_SUCCESS`) stay behind with
+    * the aside directory.
+    */
+  private[pipeline] def publish(spark: SparkSession, aside: String,
+                                stagingPath: String): Unit = {
+    val target = new Path(stagingPath)
+    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.mkdirs(target)
+    stagedFiles(spark, aside).foreach { st =>
+      val to = new Path(target, st.getPath.getName)
+      if (!fs.rename(st.getPath, to))
+        throw new java.io.IOException(s"publish: could not move ${st.getPath} to $to")
+    }
   }
 
   /** S4: full append, no dedup — reference-faithful for reviews (T5 ⚠:

@@ -1,7 +1,14 @@
 package graft.pipeline
 
+import java.nio.charset.StandardCharsets
 import java.util.concurrent.{Callable, ExecutionException, Executors}
 
+import scala.concurrent.{Await, Promise}
+import scala.concurrent.duration.Duration
+import scala.util.{Failure, Success, Try}
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.operators.{Extended, Relational}
@@ -49,22 +56,25 @@ object Runner {
     * SURVEY.md T6 ⚠) — wrapped in the reference's retry budget (r7):
     * EVERY failed attempt lands in the log attempt-numbered, exhausted
     * retries rethrow the last failure. `sleep` is injectable so tests
-    * exercise the retry without the 5-minute wall-clock wait. Retried
-    * stages keep the pipeline's declared at-least-once semantics: Spark's
-    * file/JDBC committers publish output only on task-set success, so a
-    * failed attempt leaves nothing a re-run would double-count that the
-    * dup-faithful append contract (T5) doesn't already own. A stage whose
-    * writes run together fails only once all of them have finished, so the
-    * retry never overlaps a write of the failed attempt. In staging the
-    * keyed appends are the ones that run together: a retry re-filters them
-    * by the watermark their own committed output moved. The unkeyed
-    * reviews append goes last, after both have committed, so a failed
-    * keyed append never leaves a reviews append behind for the retry to
-    * duplicate.
+    * exercise the retry without the 5-minute wall-clock wait. The log is
+    * written through the Hadoop FileSystem, so a `file:`, `hdfs:` or `s3a:`
+    * work dir logs where its stages write; an object store cannot append,
+    * so each line rewrites the small log whole, one writer at a time.
+    * Retried stages keep the pipeline's declared at-least-once semantics:
+    * Spark's file/JDBC committers publish output only on task-set success,
+    * so a failed attempt leaves nothing a re-run would double-count that
+    * the dup-faithful append contract (T5) doesn't already own. A stage
+    * whose units run together fails only once all of them have finished,
+    * so the retry never overlaps a write of the failed attempt. In staging
+    * each keyed append publishes as soon as its own write and the gate have
+    * succeeded, and a retry re-filters it by the watermark that publish
+    * moved. The unkeyed reviews append publishes only once all three
+    * writes and the gate have succeeded, so a failed keyed append never
+    * leaves a reviews append behind for the retry to duplicate.
     */
-  private def logged[A](work: String, stage: String, retries: Int = 0,
-                        delayMs: Long = 0L,
-                        sleep: Long => Unit = Thread.sleep)(f: => A): A = {
+  private def logged[A](conf: Configuration, work: String, stage: String,
+                        retries: Int, delayMs: Long,
+                        sleep: Long => Unit)(f: => A): A = {
     def attempt(n: Int): A =
       try f catch {
         case e: Throwable =>
@@ -72,51 +82,76 @@ object Runner {
           val tag =
             if (n < total) s"attempt $n/$total failed, retrying in ${delayMs}ms"
             else s"attempt $n/$total failed"
-          try {
-            java.nio.file.Files.createDirectories(java.nio.file.Paths.get(work))
-            java.nio.file.Files.writeString(
-              java.nio.file.Paths.get(s"$work/error_log.txt"),
-              s"${java.time.Instant.now} [$stage] $tag: $e\n",
-              java.nio.file.StandardOpenOption.CREATE,
-              java.nio.file.StandardOpenOption.APPEND)
-          } catch { case _: Throwable => () } // logging must not mask the failure
+          try appendLog(conf, work, s"${java.time.Instant.now} [$stage] $tag: $e\n")
+          catch { case _: Throwable => () } // logging must not mask the failure
           if (n < total) { sleep(delayMs); attempt(n + 1) } else throw e
       }
     attempt(1)
   }
 
-  /** Jobs per stage, so a run does only the work it needs. The stages run
-    * in order; inside a stage, the writes that do not depend on each other
-    * run at the same time (each job is small, so one at a time leaves most
+  private def appendLog(conf: Configuration, work: String, line: String): Unit = synchronized {
+    val log = new Path(work, "error_log.txt")
+    val fs = log.getFileSystem(conf)
+    val before =
+      if (!fs.exists(log)) Array.emptyByteArray
+      else {
+        val in = fs.open(log)
+        try in.readAllBytes() finally in.close()
+      }
+    val out = fs.create(log, true)
+    try {
+      out.write(before)
+      out.write(line.getBytes(StandardCharsets.UTF_8))
+    } finally out.close()
+  }
+
+  /** Where a staging attempt writes the batch before the gate lets it into
+    * `staging/`. It sits outside `staging/`, so a refused batch leaves no
+    * staging directory behind.
+    */
+  private[graft] def asideDir(work: String): String = s"$work/_staging_aside"
+
+  /** Runs as a short chain of dependencies rather than one stage after
+    * another, so a run does only the work it needs and keeps the cores
+    * busy while it does (each job is small, so one at a time leaves most
     * cores idle):
     *
     *  - landing: none. The CSVs are read with pinned schemas, and the
     *    normalized orders batch is persisted, so it is parsed once;
     *  - validate: one aggregate over the orders batch (AQE splits it into a
-    *    few jobs). It fills the persisted copy and still gates the batch
-    *    before anything is staged;
-    *  - staging: one write per table. The orders and shipments watermark
-    *    appends run together, orders from the persisted copy; the reviews
-    *    full append runs after both have committed (see [[logged]] for
-    *    why). The watermarks come from the staged parquet footers, without
-    *    a job;
-    *  - transform: the three analytics queries and their writes, all three
-    *    at once, over staging read with the batch's known schemas (no
-    *    inference job);
-    *  - export: one CSV write per analytics table, all three at once, from
-    *    the parquet just published, read with its known schema.
+    *    few jobs), on its own thread beside staging. It fills the persisted
+    *    copy and gates the batch: nothing reaches `staging/` before it
+    *    passes, and a refused batch publishes nothing;
+    *  - staging: one write per table, all three at once, into a directory
+    *    aside ([[asideDir]]). The orders and shipments watermark appends
+    *    take their watermarks from the published staged parquet footers,
+    *    without a job, and each publishes (renames its files into
+    *    `staging/<table>`) as soon as its write and the gate have
+    *    succeeded. The reviews full append publishes only once all three
+    *    writes and the gate have succeeded (see [[logged]] for why). Every
+    *    attempt starts by dropping whatever a killed run left aside;
+    *  - transform: one unit per analytics table, all three at once. A unit
+    *    builds its query over the published staging, read with the batch's
+    *    known schemas (no inference job), writes the parquet, and exports
+    *    the header'd CSV from the parquet just written, read with its known
+    *    schema. No table waits for another table's write; an export failure
+    *    logs as a transform failure.
     *
     * Every row count in the [[RunReport]] is observed on the write that
-    * produced the rows, not taken by a separate `count()`. The persisted
-    * batch is released when the run ends, whether it succeeds or fails.
+    * produced the rows, not taken by a separate `count()`. The gate is
+    * always awaited before the run returns or throws; only then is the
+    * persisted batch released and the aside directory deleted, whether the
+    * run succeeds or fails.
     */
   def run(spark: SparkSession, work: String, runDate: String,
           retries: Int = DefaultRetries,
           retryDelayMs: Long = DefaultRetryDelayMs,
           sleep: Long => Unit = Thread.sleep): RunReport = {
     val landing = s"$work/landing/dt=$runDate"
+    val aside = asideDir(work)
+    val conf = spark.sparkContext.hadoopConfiguration
     def logged[A](work: String, stage: String)(f: => A): A =
-      Runner.logged(work, stage, retries, retryDelayMs, sleep)(f)
+      Runner.logged(conf, work, stage, retries, retryDelayMs, sleep)(f)
 
     // 1-2. landing scan + normalization (pinned schemas)
     val (orders, reviews, shipments) = logged(work, "landing") {
@@ -126,116 +161,149 @@ object Runner {
        Pipeline.normalizeShipments(
          Pipeline.readCsv(spark, s"$landing/shipment_deliveries.csv", Pipeline.shipmentsSchema)))
     }
+    val batches = Map("orders" -> orders, "reviews" -> reviews, "shipment_deliveries" -> shipments)
+    val fs = new Path(aside).getFileSystem(conf)
     orders.persist()
     try {
       // 2.5 validate: expectations gate on the INCOMING batch, before any
-      // append — a batch that breaks key uniqueness or value rules must
+      // publish — a batch that breaks key uniqueness or value rules must
       // fail HERE, loudly, not silently corrupt the staging store. Order
-      // matters: validating after the append would advance the watermark
-      // past the bad keys, so a corrected re-delivery of the same batch
-      // would be filtered out forever — the pipeline would be wedged with
-      // no in-band recovery. (Stage logged + rethrown like any other, T6.)
-      logged(work, "validate") {
-        import org.apache.spark.sql.functions._
-        val checks = orders.agg(
-            count(lit(1)).as("n"),
-            countDistinct(col("order_id")).as("n_keys"),
-            coalesce(sum(when(col("amount") < 0, 1).otherwise(0)), lit(0L)).as("neg"))
-          .collect()(0)
-        if (checks.getLong(0) != checks.getLong(1))
-          throw new IllegalStateException(
-            s"validate: incoming orders key not unique (${checks.getLong(0)} rows, ${checks.getLong(1)} keys)")
-        if (checks.getLong(2) != 0L)
-          throw new IllegalStateException(
-            s"validate: ${checks.getLong(2)} incoming orders with negative amount")
+      // matters: publishing before the gate passes would advance the
+      // watermark past the bad keys, so a corrected re-delivery of the same
+      // batch would be filtered out forever — the pipeline would be wedged
+      // with no in-band recovery. (Stage logged + rethrown like any other,
+      // T6.)
+      val gate = Promise[Unit]()
+      def passed(): Boolean = Await.ready(gate.future, Duration.Inf).value.get.isSuccess
+
+      // 3. staging loads, written aside beside the gate: watermark-
+      //    incremental for the keyed tables, each published once its write
+      //    and the gate have succeeded; then the full append of reviews
+      //    (reference-faithful at-least-once), published only once all three
+      //    writes and the gate have. None when the gate refused the batch.
+      def stage(): Option[Map[String, Long]] = {
+        fs.delete(new Path(aside), true)
+        def keyed(t: String, pk: String) = t -> { () =>
+          val rows = Pipeline.watermarkAppendAside(
+            spark, batches(t), pk, s"$work/staging/$t", s"$aside/$t")
+          if (passed()) Pipeline.publish(spark, s"$aside/$t", s"$work/staging/$t")
+          rows
+        }
+        val written = together(keyed("orders", "order_id"),
+          keyed("shipment_deliveries", "shipment_id"),
+          "reviews" -> (() => Pipeline.fullAppend(spark, reviews, s"$aside/reviews")))
+        if (!passed()) None
+        else {
+          val rows = written.map { case (t, n) => t -> n.get }.toMap
+          Pipeline.publish(spark, s"$aside/reviews", s"$work/staging/reviews")
+          Some(rows)
+        }
       }
 
-      // 3. staging loads: watermark-incremental for the keyed tables, side
-      //    by side; then the full append of reviews (reference-faithful
-      //    at-least-once), only once both keyed appends have committed
-      val staged = logged(work, "staging") {
-        together(
-          "orders" -> (() =>
-            Pipeline.watermarkAppend(spark, orders, "order_id", s"$work/staging/orders")),
-          "shipment_deliveries" -> (() => Pipeline.watermarkAppend(
-            spark, shipments, "shipment_id", s"$work/staging/shipment_deliveries"))) +
-          ("reviews" -> Pipeline.fullAppend(spark, reviews, s"$work/staging/reviews"))
-      }
+      val outcomes = together(
+        "validate" -> { () =>
+          gate.complete(
+            try Success(logged(work, "validate")(validate(orders)))
+            catch { case e: Throwable => Failure(e) })
+          None
+        },
+        "staging" -> (() => logged(work, "staging")(stage()))).toMap
+      gate.future.value.get.get // a refused batch rethrows the gate's failure
+      val staged = outcomes("staging").get.get // Some: the gate passed
 
-      // 4. transform: run the analytics queries against the staged views,
-      //    all three writes at once; keep each table's schema and written
-      //    row count for the export
-      val analytics = logged(work, "transform") {
-        Seq("orders" -> orders, "reviews" -> reviews, "shipment_deliveries" -> shipments)
-          .foreach { case (t, batch) =>
-            spark.read.schema(batch.schema).parquet(s"$work/staging/$t")
-              .createOrReplaceTempView(s"staging_$t")
-          }
-        together(transformStaged(spark).toSeq.map { case (name, df) =>
-          name -> (() => (df.schema, Pipeline.overwriteParquet(df, s"$work/analytics/$name")))
-        }: _*)
-      }
-
-      // 5. export: the published analytics tables out as header'd CSV, all
-      //    three writes at once
-      val counts = logged(work, "export") {
-        together(analytics.toSeq.map { case (name, (schema, rows)) =>
+      // 4. transform + export: one unit per analytics table, all at once
+      val counts = logged(work, "transform") {
+        together(analytics.map { case (name, build) =>
           name -> { () =>
-            Pipeline.exportCsv(spark.read.schema(schema).parquet(s"$work/analytics/$name"),
+            val df = build(t => spark.read.schema(batches(t).schema).parquet(s"$work/staging/$t"))
+            val rows = Pipeline.overwriteParquet(df, s"$work/analytics/$name")
+            Pipeline.exportCsv(spark.read.schema(df.schema).parquet(s"$work/analytics/$name"),
               s"$work/export/$name")
             rows
           }
-        }: _*)
+        }: _*).map { case (name, rows) => name -> rows.get }.toMap
       }
       RunReport(runDate, staged, counts)
-    } finally orders.unpersist()
+    } finally {
+      orders.unpersist()
+      fs.delete(new Path(aside), true)
+    }
   }
 
-  /** Runs one stage's independent writes at the same time and returns their
-    * results by name. The pool belongs to this call: it is created by the
-    * calling thread, so its threads inherit the caller's Spark local
-    * properties (job group, scheduler pool, any key a listener attributes
-    * jobs by), and it is shut down when the call returns. Every unit is
-    * waited for before the first failure (in argument order) is rethrown,
-    * so a failed stage never retries while a sibling write still runs.
+  /** The gate on the incoming orders batch: keys unique, no negative
+    * amount. One aggregate, which also fills the persisted batch.
     */
-  private def together[A](units: (String, () => A)*): Map[String, A] = {
+  private def validate(orders: DataFrame): Unit = {
+    import org.apache.spark.sql.functions._
+    val checks = orders.agg(
+        count(lit(1)).as("n"),
+        countDistinct(col("order_id")).as("n_keys"),
+        coalesce(sum(when(col("amount") < 0, 1).otherwise(0)), lit(0L)).as("neg"))
+      .collect()(0)
+    if (checks.getLong(0) != checks.getLong(1))
+      throw new IllegalStateException(
+        s"validate: incoming orders key not unique (${checks.getLong(0)} rows, ${checks.getLong(1)} keys)")
+    if (checks.getLong(2) != 0L)
+      throw new IllegalStateException(
+        s"validate: ${checks.getLong(2)} incoming orders with negative amount")
+  }
+
+  /** Runs units at the same time and returns each one's outcome by name,
+    * in argument order; callers rethrow the failures they cannot use. The
+    * pool belongs to this call: it is created by the calling thread, so its
+    * threads inherit the caller's Spark local properties (job group,
+    * scheduler pool, any key a listener attributes jobs by), and it is shut
+    * down when the call returns. Every unit is waited for, so a failed
+    * stage never retries while a sibling write still runs.
+    */
+  private def together[A](units: (String, () => A)*): Seq[(String, Try[A])] = {
     val pool = Executors.newFixedThreadPool(units.size)
     try {
       val running = units.map { case (name, unit) =>
         name -> pool.submit(new Callable[A] { def call(): A = unit() })
       }
-      val done = running.map { case (name, f) =>
-        name -> (try Right(f.get()) catch { case e: ExecutionException => Left(e.getCause) })
+      running.map { case (name, f) =>
+        name -> (try Success(f.get()) catch { case e: ExecutionException => Failure(e.getCause) })
       }
-      done.collectFirst { case (_, Left(e)) => throw e }
-      done.collect { case (name, Right(a)) => name -> a }.toMap
     } finally pool.shutdown()
   }
 
-  /** The reference's three analytics outputs (`sql/transformation.sql`)
-    * over the staged reference-schema tables: monthly pivot of order
-    * amounts, late/undelivered conditional counts, review-percentage
-    * aggregation per product.
+  /** The reference's three analytics outputs (`sql/transformation.sql`),
+    * each built from the staged reference-schema tables by name: monthly
+    * pivot of order amounts, late/undelivered conditional counts,
+    * review-percentage aggregation per product.
     */
-  def transformStaged(spark: SparkSession): Map[String, DataFrame] = {
-    import org.apache.spark.sql.functions._
-    val orders = spark.table("staging_orders")
-    val reviews = spark.table("staging_reviews")
-    val shipments = spark.table("staging_shipment_deliveries")
+  private val analytics: Seq[(String, (String => DataFrame) => DataFrame)] = Seq(
+    "agg_monthly_orders" -> (staged => monthlyOrders(staged("orders"))),
+    "agg_shipments" -> (staged => shipmentCounts(staged("shipment_deliveries"), staged("orders"))),
+    "review_percentages" -> (staged => reviewPercentages(staged("reviews"))))
 
+  /** The three analytics outputs over the `staging_<table>` views. */
+  def transformStaged(spark: SparkSession): Map[String, DataFrame] =
+    analytics.map { case (name, build) => name -> build(t => spark.table(s"staging_$t")) }.toMap
+
+  private def monthlyOrders(orders: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions._
     val pivots = (1 to 12).map(m =>
       sum(when(month(col("order_date")) === m, col("quantity")).otherwise(0))
         .cast("int").as(f"tt_order_m$m%02d"))
-    val aggMonthly = orders.agg(pivots.head, pivots.tail: _*)
+    orders.agg(pivots.head, pivots.tail: _*)
+  }
 
-    val joined = shipments.join(orders, "order_id")
-    val aggShipments = joined.agg(
+  private def shipmentCounts(shipments: DataFrame, orders: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions._
+    shipments.join(orders, "order_id").agg(
       count(when(datediff(col("shipment_date"), col("order_date")) >= 6 &&
         col("delivery_date").isNull, lit(1))).cast("long").as("tt_late_shipments"),
       count(when(col("delivery_date").isNull && col("shipment_date").isNull,
         lit(1))).cast("long").as("tt_undelivered_items"))
+  }
 
+  /** One row per product, written as one file sorted by `product_id`: at
+    * most one row per product needs no range-partitioned global sort.
+    */
+  private def reviewPercentages(reviews: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions._
     val pctCols = (1 to 5).map(k =>
       round(sum(when(col("review") === k, 1).otherwise(0)).cast("double")
         / count(lit(1)) * 100.0, 2).as(s"pct_${k}_star")) :+
@@ -243,15 +311,10 @@ object Runner {
     // J4 parity: dim_products ⋈ reviews on product_id
     // (`sql/transformation.sql:107-108`); the dim is generated — the
     // reference assumes it pre-exists (SURVEY.md §1 ⚠)
-    val reviewPcts = reviews.groupBy(col("product_id"))
+    reviews.groupBy(col("product_id"))
       .agg(pctCols.head, pctCols.tail: _*)
-      .join(broadcast(graft.sources.Dims.dimProducts(spark)), Seq("product_id"), "left")
-      .orderBy(col("product_id"))
-
-    Map(
-      "agg_monthly_orders" -> aggMonthly,
-      "agg_shipments" -> aggShipments,
-      "review_percentages" -> reviewPcts)
+      .join(broadcast(graft.sources.Dims.dimProducts(reviews.sparkSession)), Seq("product_id"), "left")
+      .coalesce(1).sortWithinPartitions(col("product_id"))
   }
 }
 

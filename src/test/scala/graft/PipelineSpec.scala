@@ -684,6 +684,79 @@ class PipelineSpec extends AnyFunSuite {
     assert(merged(s"file://$dir/scd2_uri") == plainScd)
   }
 
+  test("error log: a file: URI work dir logs into that work dir") {
+    import graft.pipeline.Runner
+    val work = tmpDir() // no landing files → the landing stage fails
+    intercept[Exception] { Runner.run(spark, s"file://$work", "2026-01-01", retryDelayMs = 0L) }
+    val log = java.nio.file.Paths.get(s"$work/error_log.txt")
+    assert(Files.exists(log), "error_log.txt written inside the work dir")
+    val lines = Files.readAllLines(log).asScala
+    assert(lines.size == 2 && lines.forall(_.contains("[landing] attempt ")), lines)
+    assert(lines(0).contains("attempt 1/2 failed, retrying in 0ms"), lines)
+    assert(lines(1).contains("attempt 2/2 failed"), lines)
+  }
+
+  test("staging aside: neither a refused batch nor a successful run leaves it behind") {
+    import graft.pipeline.Runner
+    val work = tmpDir()
+    landFixture(work)
+    val landing = s"$work/landing/dt=2026-01-01"
+    writeCsv(landing, "orders.csv",
+      """order_id,customer_id,order_date,product_id,unit_price,quantity,total_price
+        |1,10,2022-01-03,5,100,2,-200
+        |""".stripMargin)
+    val aside = java.nio.file.Paths.get(Runner.asideDir(work))
+    intercept[IllegalStateException] { Runner.run(spark, work, "2026-01-01", retryDelayMs = 0L) }
+    assert(!Files.exists(aside), "a refused batch left its staging attempt aside")
+    val text = Files.readString(java.nio.file.Paths.get(s"$work/error_log.txt"))
+    assert(text.contains("[validate]") && !text.contains("[staging]"), text)
+    writeCsv(landing, "orders.csv", ordersCsv)
+    assert(Runner.run(spark, work, "2026-01-01", retryDelayMs = 0L).stagedRows("orders") == 3L)
+    assert(!Files.exists(aside), "a successful run left its staging attempt aside")
+  }
+
+  test("staging aside: what a killed run left aside is dropped, never published") {
+    import graft.pipeline.Runner
+    import spark.implicits._
+    val work = tmpDir()
+    landFixture(work)
+    // a killed run's leftovers: a torn orders part file and a whole reviews
+    // append that never published
+    val aside = Runner.asideDir(work)
+    Files.createDirectories(java.nio.file.Paths.get(s"$aside/orders"))
+    Files.writeString(java.nio.file.Paths.get(s"$aside/orders/part-00000-killed.parquet"),
+      "not a parquet footer")
+    Seq((1, 9)).toDF("review", "product_id").write.parquet(s"$aside/reviews")
+    val r = Runner.run(spark, work, "2026-01-01", retryDelayMs = 0L)
+    assert(r.stagedRows == Map("orders" -> 3L, "shipment_deliveries" -> 2L, "reviews" -> 3L))
+    assert(!Files.exists(java.nio.file.Paths.get(s"$work/error_log.txt")), "no attempt failed")
+    val orders = spark.read.parquet(s"$work/staging/orders")
+      .select("order_id").collect().map(_.getInt(0)).toSeq.sorted
+    assert(orders == Seq(1, 2, 3), s"staged orders: $orders")
+    val reviews = spark.read.parquet(s"$work/staging/reviews")
+      .collect().map(x => (x.getInt(0), x.getInt(1))).toSeq.sorted
+    assert(reviews == Seq((4, 5), (5, 5), (5, 6)), s"staged reviews: $reviews")
+    assert(!Files.exists(java.nio.file.Paths.get(aside)))
+  }
+
+  test("review_percentages exports its rows in product_id order") {
+    import graft.pipeline.Runner
+    val work = tmpDir()
+    landFixture(work)
+    val products = new scala.util.Random(11).shuffle((1 to 40).toList)
+    writeCsv(s"$work/landing/dt=2026-01-01", "reviews.csv",
+      products.flatMap(p => Seq(s"5,$p", s"${1 + p % 5},$p")).mkString("review,product_id\n", "\n", "\n"))
+    assert(Runner.run(spark, work, "2026-01-01", retryDelayMs = 0L)
+      .analyticsRows("review_percentages") == 40L)
+    val csv = Files.list(java.nio.file.Paths.get(s"$work/export/review_percentages"))
+      .iterator().asScala.filter(_.getFileName.toString.endsWith(".csv")).toSeq
+    assert(csv.size == 1, csv)
+    val lines = Files.readAllLines(csv.head).asScala
+    assert(lines.head.startsWith("product_id,"), lines.head)
+    val ids = lines.tail.map(_.takeWhile(_ != ',').toInt)
+    assert(ids == (1 to 40), s"export order: $ids")
+  }
+
   test("csv export round-trips with header") {
     val dir = tmpDir()
     val df = graft.operators.Relational.revenueByNation(spark, TestSpark.sf)

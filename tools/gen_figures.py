@@ -14,10 +14,12 @@ pure function of the artifacts:
                      a stale log can't be mistaken for HEAD); "all green" is
                      printed only when F is 0
   --correct "M/M"  — the check_oracle.py verdict line, e.g. "91/91"
+  --correct-sf SF  — the scale factor check_oracle.py ran at, e.g. "0.1"
+                     (required with --correct)
 
 Usage:
-  python3 tools/gen_figures.py --passed 127 --failed 0 --cancelled 5 --correct 91/91
-  python3 tools/gen_figures.py --passed 127 --failed 0 --cancelled 5 --correct 91/91 --apply
+  python3 tools/gen_figures.py --passed 127 --failed 0 --cancelled 5 --correct 91/91 --correct-sf 0.01
+  python3 tools/gen_figures.py --passed 127 --failed 0 --cancelled 5 --correct 91/91 --correct-sf 0.01 --apply
 
 With --apply the text between the FIGURES:BEGIN/END markers in README.md
 is replaced; everything outside the markers is untouched.
@@ -31,7 +33,8 @@ BEGIN = "<!-- FIGURES:BEGIN (generated by tools/gen_figures.py; do not edit) -->
 END = "<!-- FIGURES:END -->"
 
 
-def block(bench: dict, tests: tuple[int, int, int] | None, correct: str | None) -> str:
+def block(bench: dict, tests: tuple[int, int, int] | None, correct: str | None,
+          correct_sf: str | None) -> str:
     queries = {k: v for k, v in bench["queries"].items() if v >= 0}
     failed = sorted(k for k, v in bench["queries"].items() if v < 0)
     skipped = bench.get("skipped", [])
@@ -71,7 +74,7 @@ def block(bench: dict, tests: tuple[int, int, int] | None, correct: str | None) 
     if correct:
         lines.append(
             f"- correctness: **{correct} queries** match the DuckDB oracle "
-            "(rows + schema + value hash) at sf0.01 via `tools/check_oracle.py`."
+            f"(rows + schema + value hash) at sf{correct_sf} via `tools/check_oracle.py`."
         )
     if tests:
         passed, failed_tests, cancelled = tests
@@ -92,6 +95,8 @@ def main() -> int:
     ap.add_argument("--failed", type=int, default=None)
     ap.add_argument("--cancelled", type=int, default=None)
     ap.add_argument("--correct", default=None, help='e.g. "91/91"')
+    ap.add_argument("--correct-sf", default=None,
+                    help='the scale factor the oracle check ran at, e.g. "0.1"')
     ap.add_argument("--apply", action="store_true")
     args = ap.parse_args()
 
@@ -100,7 +105,9 @@ def main() -> int:
     counts = (args.passed, args.failed, args.cancelled)
     if any(c is None for c in counts) and any(c is not None for c in counts):
         ap.error("--passed, --failed and --cancelled go together")
-    text = block(bench, None if counts[0] is None else counts, args.correct)
+    if (args.correct is None) != (args.correct_sf is None):
+        ap.error("--correct and --correct-sf go together")
+    text = block(bench, None if counts[0] is None else counts, args.correct, args.correct_sf)
     if not args.apply:
         print(text)
         return 0
